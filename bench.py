@@ -94,7 +94,7 @@ import re
 import time
 
 from mspr2_back_spark.plans import QUERIES
-from mspr2_back_spark.session import get_spark
+from mspr2_back_spark.session import DEFAULT_SHUFFLE_PARTITIONS, get_spark
 
 REPEATS = 5
 
@@ -509,7 +509,7 @@ def main() -> None:
     # superset of every field the line ever had. "cpus" is recorded
     # so the driver's low-core scaling sweep is attributable from the
     # artifact alone (the r18 suspect_cpus_ignored false positive).
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = DEFAULT_SHUFFLE_PARTITIONS
     compact = {
         "metric": "headline_queries_total_sec",
         "value": total,

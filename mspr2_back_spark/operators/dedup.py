@@ -672,36 +672,27 @@ def near_dup_clusters(
     assignment (pairs alone under-merge: {a,b} and {b,c} are one
     cluster even if (a,c) was never emitted).
 
-    Algorithm: minimum-label propagation to fixpoint. Each iteration
-    is one distributed join (labels onto edges) + one min-aggregate;
-    the driver only reads the 1-row monotone label sum per round (the
+    Algorithm: minimum-label propagation to fixpoint — the engine's
+    one connected-components algorithm. Each iteration is one
+    distributed join (labels onto edges) + one min-aggregate; the
+    driver only reads the 1-row monotone label sum per round (the
     convergence witness), so state stays on the executors. Node ids
     must be an integral type — the sum witness is exact only there,
     so anything else raises up front rather than risking a silent
-    early exit. Converges in graph-diameter rounds —
-    near-dup clusters are shallow (stars/chains of a few hops), so
-    this beats the large-star/small-star alternation (which pays ~2x
-    the per-round joins to guarantee O(log n) rounds on adversarial
-    chains) on real dedup graphs. Iteration caps at ``max_iter`` and
-    raises if not converged, rather than returning a silently
-    under-merged clustering.
+    early exit. Converges in graph-diameter rounds; near-dup clusters
+    are shallow (stars/chains of a few hops).
 
-    Deep-chain escape hatch (r10, VERDICT r9 hygiene note): the
-    default cap of 20 rounds covers any graph of diameter < 20 — on
-    real near-dup corpora clusters are stars and short chains, so
-    hitting the cap almost always means the pair generation is wrong
-    (threshold too low, banding misconfigured), which is why the
-    default stays low and loud. If a corpus legitimately carries
-    longer chains (e.g. drifting boilerplate where doc_i ~ doc_{i+1}
-    but doc_1 !~ doc_n), either raise ``max_iter`` to the expected
-    diameter — cost is one labels-sized shuffle per extra round, the
-    edges stay cached — or switch to the pytest-pinned
-    ``star_contraction_clusters`` hedge in this module, whose
-    large-star/small-star alternation converges in O(log n) rounds
-    regardless of diameter (it pays ~2x the joins per round, so it
-    only wins when the diameter is genuinely large;
-    ``tests/test_pipeline_ops.py`` exercises it on a chain deeper
-    than this default cap).
+    Iteration cap: ``max_iter`` bounds the total propagation rounds,
+    and a graph that has not converged by then raises RuntimeError
+    rather than returning a silently under-merged clustering. The
+    default of 20 covers any graph of diameter < 20; on real near-dup
+    corpora hitting it almost always means the pair generation is
+    wrong (threshold too low, banding misconfigured), so the default
+    stays low and loud. A corpus that legitimately carries longer
+    chains (drifting boilerplate where doc_i ~ doc_{i+1} but
+    doc_1 !~ doc_n) raises ``max_iter`` to its expected diameter —
+    each extra round costs one labels-sized shuffle, the edges stay
+    cached.
 
     Output: one row per distinct node — (node, cluster) with
     ``cluster = min(reachable ids)``.
@@ -838,114 +829,10 @@ def near_dup_clusters(
         raise RuntimeError(
             f"near_dup_clusters: no fixpoint after {max_iter} rounds "
             "(pathological chain graph? raise max_iter to the expected "
-            "diameter, or use star_contraction_clusters — O(log n) "
-            "rounds on any graph)"
+            "diameter)"
         )
     finally:
         edges.unpersist()
-
-
-def star_contraction_clusters(
-    pairs: DataFrame,
-    a_col: str = "doc_id_1",
-    b_col: str = "doc_id_2",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Connected components by ALTERNATING large-star/small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce
-    and Beyond", SoCC'14 — public algorithm), same output contract as
-    ``near_dup_clusters``: one row per distinct node, (node, cluster)
-    with cluster = min reachable id.
-
-    Per round: large-star hangs every neighbor v > u off
-    m(u) = min(N(u) ∪ {u}); small-star (on edges directed high→low)
-    re-hangs every smaller neighbor plus u itself off the minimum.
-    The edge list CONTRACTS toward one star per component and the
-    alternation converges in O(log n) rounds on any graph — the
-    hedge against label propagation's diameter-bound rounds, and on
-    dense clique-heavy graphs (the ≥27×-replication worst case in
-    SCALING.md) round 1 already collapses each clique to a star, so
-    later rounds run on ~|V| edges instead of |E|.
-
-    Trade-off vs label propagation (measured in SCALING.md round 9):
-    each round costs ~2× the shuffles (two star phases + the
-    edge-set convergence check), so on the SHALLOW sparse graphs
-    real near-dup corpora produce, LP's fewer-shuffles-per-round
-    wins; star contraction wins when cliques dominate. Every
-    iteration localCheckpoints (eager) to truncate lineage —
-    the standard iterative pattern, reliable checkpoints on a real
-    cluster."""
-    raw = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    nodes = (
-        raw.select(F.col("src").alias("node"))
-        .union(raw.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # canonical high→low directed form, self-loops dropped
-    edges = (
-        raw.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.greatest("src", "dst").alias("src"),
-            F.least("src", "dst").alias("dst"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        # -- large-star: for each u, m = min(N(u) ∪ {u}); emit
-        # (v, m) for every neighbor v > u --
-        und = edges.union(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        m = (
-            und.groupBy("src")
-            .agg(F.min("dst").alias("mn"))
-            .select("src", F.least("mn", "src").alias("m"))
-        )
-        large = (
-            und.join(m, "src")
-            .filter(F.col("dst") > F.col("src"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-        )
-        # -- small-star on high→low edges: for each u, m = min of
-        # its smaller neighbors; re-hang them all (and u) off m --
-        j = large.join(
-            large.groupBy("src").agg(F.min("dst").alias("m")), "src"
-        )
-        small = (
-            j.select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .union(j.select("src", F.col("m").alias("dst")))
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        # converged iff the canonical edge set is unchanged
-        converged = (
-            small.count() == edges.count()
-            and small.subtract(edges).count() == 0
-        )
-        edges = small
-        if converged:
-            break
-    else:
-        raise RuntimeError(
-            f"star_contraction_clusters: no fixpoint after {max_iter} rounds"
-        )
-    # final edges form one star per component (leaf → component min,
-    # by the connectivity-preservation invariant of both phases);
-    # minima and singleton nodes self-label via the LEFT join
-    return (
-        nodes.join(
-            edges.select(F.col("src").alias("node"), F.col("dst").alias("lbl")),
-            "node",
-            "left",
-        )
-        .groupBy("node")
-        .agg(F.min(F.coalesce(F.col("lbl"), F.col("node"))).alias("cluster"))
-    )
 
 
 def repeated_span_coverage(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:

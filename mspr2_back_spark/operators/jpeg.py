@@ -360,92 +360,19 @@ def _edge_pad(plane: np.ndarray, th: int, tw: int) -> np.ndarray:
     selection, no arithmetic — but without np.pad's per-call Python
     overhead, which profiled at ~0.1 ms per call on the codec's tiny
     planes (~0.5 ms/doc across the 5 pad sites, ~19% of the whole
-    jpeg_meta_stats per-doc budget — guide §4.2: per-task work)."""
+    jpeg_meta_stats per-doc budget — guide §4.2: per-task work).
+    A target smaller than the plane raises ValueError: this pads,
+    it never crops."""
     h, w = plane.shape
+    if th < h or tw < w:
+        raise ValueError(
+            f"_edge_pad target {th}x{tw} is smaller than the {h}x{w} plane"
+        )
     if th == h and tw == w:
         return plane
     ri = np.minimum(np.arange(th), h - 1)
     ci = np.minimum(np.arange(tw), w - 1)
     return plane[np.ix_(ri, ci)]
-
-
-def _bitlen(v: np.ndarray) -> np.ndarray:
-    """Element-wise bit length of |v| (int64), exact integer math —
-    searchsorted over powers of two, no float log2 boundary risk."""
-    return np.searchsorted(
-        _BITLEN_POWERS, np.abs(v), side="right"
-    ).astype(np.int64)
-
-
-_BITLEN_POWERS = (1 << np.arange(32)).astype(np.int64)
-
-
-@lru_cache(maxsize=1024)
-def _emission_order(
-    samp: tuple[tuple[int, int], ...],
-    comp_bw: tuple[int, ...],
-    mcu_x: int,
-    mcu_y: int,
-    restart_interval: int,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Scan emission order as arrays: per emitted block, its
-    (component, grid index, restart segment) — MCU-major, the walk
-    T.81's interleaved scan prescribes. Cached on the shape tuple:
-    the codec corpus cycles a closed set of dims/profiles, so the
-    per-MCU Python walk runs once per shape per worker."""
-    ncomp = len(samp)
-    order_ci: list[int] = []
-    order_idx: list[int] = []
-    order_seg: list[int] = []
-    for mcu in range(mcu_x * mcu_y):
-        seg = mcu // restart_interval if restart_interval else 0
-        my, mx = divmod(mcu, mcu_x)
-        for ci in range(ncomp):
-            hi, vi = samp[ci]
-            for byi in range(vi):
-                for bxi in range(hi):
-                    order_ci.append(ci)
-                    order_idx.append(
-                        (my * vi + byi) * comp_bw[ci] + mx * hi + bxi
-                    )
-                    order_seg.append(seg)
-    return (
-        np.asarray(order_ci, dtype=np.int64),
-        np.asarray(order_idx, dtype=np.int64),
-        np.asarray(order_seg, dtype=np.int64),
-    )
-
-
-@lru_cache(maxsize=64)
-def _encode_luts(
-    tables: tuple[tuple[tuple[int, ...], tuple[int, ...]], ...],
-) -> tuple[np.ndarray, np.ndarray]:
-    """(code, length) arrays per component for one table family
-    (DC: 16 sizes; AC: 256 run/size symbols) — cached on the table
-    contents (the Annex K constants in practice). -1 marks symbols
-    absent from the table so lookups keep the dict path's loud
-    KeyError behavior."""
-    ncomp = len(tables)
-    codes = np.full((ncomp, 256), -1, dtype=np.int64)
-    lens = np.zeros((ncomp, 256), dtype=np.int64)
-    for ci, (bits, vals) in enumerate(tables):
-        for s, (code, length) in _canonical_codes_cached(bits, vals).items():
-            codes[ci, s], lens[ci, s] = code, length
-    return codes, lens
-
-
-# Crossover between the scalar and vectorized entropy coders, in
-# total blocks per scan. Measured on the jpeg_meta_stats corpus
-# shapes (13-35 × 9-25 px, 4-60 blocks, ~4,700 distinct shape/DRI
-# combos) the SCALAR loop wins — 0.56-0.73 ms/doc encode vs
-# 0.85-0.88 vectorized: per-call numpy fixed overhead beats the
-# short interpreted loop, and the corpus's shape diversity defeats
-# per-shape cache amortization. On large scans the vectorized path
-# wins decisively and asymptotically (420 size sweep, warm:
-# 64×48 3.8→2.3 ms, 128×96 14.5→6.8 ms, 512×384 231→160 ms).
-# 128 blocks puts every corpus image on the scalar side and every
-# measured vectorized win (≥288 blocks) on the other.
-_VECTOR_SCAN_MIN_BLOCKS = 128
 
 
 def _encode_baseline_scan(
@@ -458,37 +385,11 @@ def _encode_baseline_scan(
     ac_tables: tuple[tuple[tuple[int, ...], tuple[int, ...]], ...],
     restart_interval: int,
 ) -> bytes:
-    """Baseline entropy coder: size-dispatched between the scalar
-    per-coefficient loop (small scans — the codec-query corpus) and
-    the vectorized coder (large scans). Both produce BIT-IDENTICAL
-    streams — pinned against each other and a scalar reference by
-    tests/test_jpeg_scan_coder.py over profiles/DRI/shapes, and by
-    7,281 hash-equal reference encodes."""
-    nblocks = mcu_x * mcu_y * sum(hi * vi for hi, vi in samp)
-    if nblocks < _VECTOR_SCAN_MIN_BLOCKS:
-        return _encode_scan_scalar(
-            flat, samp, comp_bw, mcu_x, mcu_y, dc_tables, ac_tables,
-            restart_interval,
-        )
-    return _encode_scan_vectorized(
-        flat, samp, comp_bw, mcu_x, mcu_y, dc_tables, ac_tables,
-        restart_interval,
-    )
-
-
-def _encode_scan_scalar(
-    flat: list[np.ndarray],
-    samp: list[tuple[int, int]],
-    comp_bw: list[int],
-    mcu_x: int,
-    mcu_y: int,
-    dc_tables: tuple[tuple[tuple[int, ...], tuple[int, ...]], ...],
-    ac_tables: tuple[tuple[tuple[int, ...], tuple[int, ...]], ...],
-    restart_interval: int,
-) -> bytes:
-    """The per-coefficient scalar coder (tolist + plain-int bit
-    arithmetic). Faster than the vectorized path below
-    _VECTOR_SCAN_MIN_BLOCKS — see the crossover note there."""
+    """Baseline entropy coder: one interpreted pass over the scan in
+    MCU order, per-coefficient DC-diff/AC run-length symbols written
+    through _BitWriter (byte stuffing, RSTn framing at every
+    ``restart_interval`` MCUs). Its output is pinned against an
+    independent scalar reference by tests/test_jpeg_scan_coder.py."""
     ncomp = len(flat)
     dc_codes = [_canonical_codes_cached(b, v) for b, v in dc_tables]
     ac_codes = [_canonical_codes_cached(b, v) for b, v in ac_tables]
@@ -542,188 +443,6 @@ def _encode_scan_scalar(
                     col = mx * hi + bxi
                     write_block(ci, flat[ci][row * comp_bw[ci] + col])
     return writer.flush()
-
-
-def _encode_scan_vectorized(
-    flat: list[np.ndarray],
-    samp: list[tuple[int, int]],
-    comp_bw: list[int],
-    mcu_x: int,
-    mcu_y: int,
-    dc_tables: tuple[tuple[tuple[int, ...], tuple[int, ...]], ...],
-    ac_tables: tuple[tuple[tuple[int, ...], tuple[int, ...]], ...],
-    restart_interval: int,
-) -> bytes:
-    """Vectorized baseline entropy coder — BIT-IDENTICAL to the
-    scalar loop (guide §4.2: hand whole batches to numpy instead of
-    looping in Python), the winning side of the dispatch for large
-    scans.
-
-    Shape: one pass builds EVERY symbol of the scan as parallel
-    (code, length) arrays — DC diffs with per-restart-segment resets,
-    AC run-lengths from one np.nonzero over the (blocks, 63) AC
-    matrix, ZRL expansion by np.repeat — ordered by a composite
-    (block, coef, zrl, magbit) key; the bitstream is then expanded
-    once (global bit array) and cut per restart segment for the
-    byte-align / stuff / RSTn framing T.81 prescribes. Even the
-    per-restart-segment framing is one scatter: byte-stuffing and
-    marker insertion are computed as output-position arithmetic, so
-    no Python loop scales with MCU count. The emission-order walk and
-    the Huffman LUT arrays are lru_cached on the (dims, sampling,
-    DRI) shape."""
-    ncomp = len(flat)
-    ci_arr, idx_arr, seg_arr = _emission_order(
-        tuple(samp), tuple(comp_bw), mcu_x, mcu_y, restart_interval
-    )
-    nblocks = ci_arr.shape[0]
-
-    # per-emission zigzag coefficients, (nblocks, 64)
-    zz = np.empty((nblocks, 64), dtype=np.int64)
-    for ci in range(ncomp):
-        m = ci_arr == ci
-        zz[m] = flat[ci][idx_arr[m]]
-
-    # Huffman LUTs as cached arrays (KeyError parity: a size/symbol
-    # outside the Annex K tables must still fail loudly, like the
-    # dict the scalar loop used)
-    dcc, dcl = _encode_luts(dc_tables)
-    acc, acl = _encode_luts(ac_tables)
-
-    # --- DC: diff against the previous block of the SAME component,
-    # reset to 0 at each restart-segment start ---
-    dcs = zz[:, 0]
-    diff = np.empty(nblocks, dtype=np.int64)
-    for ci in range(ncomp):
-        pos = np.flatnonzero(ci_arr == ci)
-        d = dcs[pos]
-        prev = np.concatenate(([0], d[:-1]))
-        s = seg_arr[pos]
-        first = np.concatenate(([True], s[1:] != s[:-1]))
-        prev[first] = 0
-        diff[pos] = d - prev
-    dsize = _bitlen(diff)
-    dmag = np.where(diff < 0, diff + (1 << dsize) - 1, diff)
-    if int(dsize.max(initial=0)) > 11:
-        raise KeyError(int(dsize.max()))  # outside the Annex K DC table
-    dc_code = dcc[ci_arr, dsize]
-    dc_len = dcl[ci_arr, dsize]
-    if (dc_code < 0).any():
-        raise KeyError("DC size outside the Huffman table")
-
-    # --- AC: run-length symbols from one nonzero pass ---
-    A = zz[:, 1:]
-    nz_b, nz_k = np.nonzero(A)
-    vals = A[nz_b, nz_k]
-    nnz = nz_b.shape[0]
-    first_of_row = np.empty(nnz, dtype=bool)
-    first_of_row[:1] = True
-    first_of_row[1:] = nz_b[1:] != nz_b[:-1]
-    shifted_k = np.empty(nnz, dtype=np.int64)
-    shifted_k[:1] = 0
-    shifted_k[1:] = nz_k[:-1]
-    prev_k = np.where(first_of_row, -1, shifted_k)
-    run = nz_k - prev_k - 1
-    asize = _bitlen(vals)
-    amag = np.where(vals < 0, vals + (1 << asize) - 1, vals)
-    nzrl = run // 16
-    sym = ((run % 16) << 4) | asize
-    ac_ci = ci_arr[nz_b]
-    ac_code = acc[ac_ci, sym]
-    ac_len = acl[ac_ci, sym]
-    if (ac_code < 0).any():
-        raise KeyError("AC run/size outside the Huffman table")
-    # EOB for every block whose final AC coefficient is zero
-    eob_b = np.flatnonzero(A[:, 62] == 0)
-    eob_code = acc[ci_arr[eob_b], 0]
-    eob_len = acl[ci_arr[eob_b], 0]
-    if (eob_code < 0).any():
-        raise KeyError("EOB outside the Huffman table")
-    # ZRL fills: nzrl copies before each (run%16, size) symbol
-    zrl_src = np.repeat(np.arange(nz_b.shape[0]), nzrl)
-    zrl_code = acc[ac_ci[zrl_src], 0xF0]
-    zrl_len = acl[ac_ci[zrl_src], 0xF0]
-    if (zrl_code < 0).any():
-        raise KeyError("ZRL outside the Huffman table")
-    starts = np.cumsum(nzrl) - nzrl
-    zrl_t = np.arange(zrl_src.shape[0]) - starts[zrl_src]
-
-    # --- assemble in emission order via a composite sort key:
-    # (block, coef position 0..64, zrl slot, mag-after-code) ---
-    def key(b, k, t, m):
-        return ((b * 65 + k) * 8 + t) * 2 + m
-
-    # nz_k is the index into the 63-wide AC matrix → coef position
-    # k+1; DC sits at position 0, EOB at position 64.
-    parts_code = [dc_code, dmag[dsize > 0]]
-    parts_len = [dc_len, dsize[dsize > 0]]
-    parts_key = [
-        key(np.arange(nblocks), 0, 0, 0),
-        key(np.flatnonzero(dsize > 0), 0, 0, 1),
-    ]
-    parts_code += [zrl_code, ac_code, amag[asize > 0]]
-    parts_len += [zrl_len, ac_len, asize[asize > 0]]
-    parts_key += [
-        key(nz_b[zrl_src], nz_k[zrl_src] + 1, zrl_t, 0),
-        key(nz_b, nz_k + 1, nzrl, 0),
-        key(
-            nz_b[asize > 0],
-            nz_k[asize > 0] + 1,
-            nzrl[asize > 0],
-            1,
-        ),
-    ]
-    parts_code.append(eob_code)
-    parts_len.append(eob_len)
-    parts_key.append(key(eob_b, 64, 0, 0))
-    codes = np.concatenate(parts_code)
-    lens = np.concatenate(parts_len)
-    keys = np.concatenate(parts_key)
-    order = np.argsort(keys, kind="stable")
-    codes, lens, keys = codes[order], lens[order], keys[order]
-    ent_seg = seg_arr[keys // (65 * 8 * 2)]
-
-    # --- global bit expansion ---
-    total = int(lens.sum())
-    bit_entry = np.repeat(np.arange(lens.shape[0]), lens)
-    bit_pos = np.arange(total) - np.repeat(np.cumsum(lens) - lens, lens)
-    bits = (
-        (codes[bit_entry] >> (lens[bit_entry] - 1 - bit_pos)) & 1
-    ).astype(np.uint8)
-    seg_of_bit = ent_seg[bit_entry]
-    nseg = int(seg_arr.max()) + 1 if nblocks else 1
-    bounds = np.searchsorted(seg_of_bit, np.arange(nseg + 1))
-
-    # --- framing, fully vectorized across restart segments: each
-    # segment is 1-padded to a byte boundary (T.81 F.1.2.3), packed,
-    # byte-stuffed (FF → FF 00), and followed by its RSTn marker —
-    # all computed as one scatter into the padded bit array and one
-    # scatter into the stuffed output, no per-segment Python loop ---
-    seg_bits = np.diff(bounds)
-    pad_lens = ((seg_bits + 7) // 8) * 8
-    pad_starts = np.concatenate(([0], np.cumsum(pad_lens)))
-    padded = np.ones(int(pad_starts[-1]), dtype=np.uint8)
-    local = np.arange(total) - np.repeat(bounds[:-1], seg_bits)
-    padded[np.repeat(pad_starts[:-1], seg_bits) + local] = bits
-    packed = np.packbits(padded)
-    seg_of_byte = np.repeat(np.arange(nseg), pad_lens // 8)
-    is_ff = packed == 0xFF
-    ff_before = np.concatenate(([0], np.cumsum(is_ff[:-1])))
-    out_pos = np.arange(packed.shape[0]) + ff_before + 2 * seg_of_byte
-    out = np.zeros(
-        packed.shape[0] + int(is_ff.sum()) + 2 * (nseg - 1), dtype=np.uint8
-    )
-    out[out_pos] = packed
-    if nseg > 1:
-        seg_byte_ends = np.cumsum(pad_lens // 8)[:-1]
-        m_pos = (
-            seg_byte_ends
-            + ff_before[seg_byte_ends - 1]
-            + is_ff[seg_byte_ends - 1]
-            + 2 * np.arange(nseg - 1)
-        )
-        out[m_pos] = 0xFF
-        out[m_pos + 1] = 0xD0 + (np.arange(nseg - 1) & 7)
-    return out.tobytes()
 
 
 def _fdct_blocks(plane: np.ndarray) -> np.ndarray:
@@ -858,10 +577,7 @@ def encode_jpeg(
         (tuple(AC_CHROMA_BITS), tuple(AC_CHROMA_VALS)),
     )[:ncomp]
 
-    # r19: the per-coefficient write_block + _BitWriter loop became
-    # the vectorized scan coder (bit-identical; see
-    # _encode_baseline_scan) — it was the largest slice of the
-    # jpeg_meta_stats per-doc budget (guide §4.2)
+    # one entropy coder for every image size (see _encode_baseline_scan)
     entropy = _encode_baseline_scan(
         flat, samp, comp_bw, mcu_x, mcu_y, dc_tables, ac_tables,
         restart_interval,

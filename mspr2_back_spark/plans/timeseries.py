@@ -747,7 +747,9 @@ def funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     The quartiles ride operators/quantiles.binned_quantiles over the
     converted-users relation (3600-second bins — no global row sort,
     the same scale path as equidepth_price_bands); latency is
-    floor-of-epoch-seconds arithmetic on both engines. One row out.
+    floor-of-epoch-seconds arithmetic on both engines. One row out,
+    also when nobody converts: (0, NULL, NULL, NULL, NULL, NULL), as
+    the oracle's COUNT/MIN/MAX over an empty relation gives.
     """
     from mspr2_back_spark.operators.quantiles import binned_quantiles
     from mspr2_back_spark.plans.workloads import (
@@ -820,18 +822,32 @@ def funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("latency_sec").alias("min_sec"),
         F.max("latency_sec").alias("max_sec"),
     )
+    # The one-row cohort frame LEFT-joins both aggregates, so an empty
+    # converted relation still yields its row (NULL stats, n = 0). It
+    # is built in the JVM (a createDataFrame row list is scanned by a
+    # Python worker: +0.25 s measured). Its literal key folds, so both
+    # joins plan as BroadcastNestedLoopJoin over 1 x <=1 rows.
+    cohort = spark.range(1, numPartitions=1).select(
+        F.lit("all").alias("cohort")
+    )
     return (
-        qs.select(
-            F.col("n_orders").alias("n_converted"),
-            F.col("p25").cast("bigint").alias("p25_sec"),
-            F.col("p50").cast("bigint").alias("p50_sec"),
-            F.col("p75").cast("bigint").alias("p75_sec"),
-            F.col("grp").alias("cohort"),
+        cohort.join(
+            F.broadcast(
+                qs.select(
+                    F.col("n_orders").alias("n_converted"),
+                    F.col("p25").cast("bigint").alias("p25_sec"),
+                    F.col("p50").cast("bigint").alias("p50_sec"),
+                    F.col("p75").cast("bigint").alias("p75_sec"),
+                    F.col("grp").alias("cohort"),
+                )
+            ),
+            "cohort",
+            "left",
         )
-        .join(F.broadcast(extremes), "cohort")
+        .join(F.broadcast(extremes), "cohort", "left")
         .select(
-            "n_converted", "min_sec", "p25_sec", "p50_sec", "p75_sec",
-            "max_sec",
+            F.coalesce("n_converted", F.lit(0)).alias("n_converted"),
+            "min_sec", "p25_sec", "p50_sec", "p75_sec", "max_sec",
         )
     )
 

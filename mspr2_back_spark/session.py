@@ -12,11 +12,13 @@ import re
 
 from pyspark.sql import SparkSession
 
+# Local cores (SPARK_GRAFT_CPUS, read once): the local[N] master and
+# the default shuffle partition count.
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-# JVM byte-size literal: digits plus an optional b/k/m/g/t suffix
-# (optionally followed by 'b', e.g. "64m", "64mb", "1048576").
-_SIZE_RE = re.compile(r"^[0-9]+(?:[bkmgt]b?)?$", re.IGNORECASE)
+# JVM byte-size literal: digits plus an optional unit — 'b', or one of
+# k/m/g/t optionally followed by 'b' (e.g. "64m", "64mb", "1048576").
+_SIZE_RE = re.compile(r"^[0-9]+(?:b|[kmgt]b?)?$", re.IGNORECASE)
 
 
 def _advisory_partition_bytes() -> str:
@@ -62,10 +64,9 @@ def get_spark(
       runtime stats anyway.
     - Arrow on: every toPandas()/applyInPandas crossing is batched.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master or f"local[{DEFAULT_SHUFFLE_PARTITIONS}]")
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),

@@ -65,15 +65,11 @@ def main(argv: list[str] | None = None) -> int:
         print(f"unknown query {args.query!r}; --list shows all", file=sys.stderr)
         return 2
 
-    from pyspark.sql import SparkSession
+    from mspr2_back_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    # the shipped session conf (AQE, advisory size), so printed plans
+    # are the ones the engine runs
+    spark = get_spark(app_name="mspr2_back_spark_explain")
     spark.sparkContext.setLogLevel("ERROR")
     df = QUERIES[args.query](spark, args.sf_dir)
     df.explain("formatted")

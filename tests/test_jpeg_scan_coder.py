@@ -1,11 +1,10 @@
-"""r19: the baseline JPEG entropy coder is vectorized
-(operators/jpeg._encode_baseline_scan — numpy symbol assembly, one
-global bit expansion, scatter-based stuffing/restart framing). This
-test pins it BIT-IDENTICAL to the scalar per-coefficient reference
-(the former write_block + _BitWriter loop, reimplemented here
-verbatim) across profiles, qualities, restart intervals and shapes —
-including multi-ZRL runs, FF-stuffing inside and at the end of
-restart segments, and the 1×1 and non-8-multiple edge shapes."""
+"""The baseline JPEG entropy coder (operators/jpeg._encode_baseline_scan,
+the one scan coder every encode_jpeg call runs) is pinned BIT-IDENTICAL
+to an independent scalar reference (reimplemented here) across
+profiles, qualities, restart intervals and shapes — including multi-ZRL
+runs, FF-stuffing inside and at the end of restart segments, the 1×1
+edge shape and a 1,152-block 4:2:0 scan. The edge-replication pad the
+encoder feeds it is pinned here too."""
 
 from __future__ import annotations
 
@@ -22,8 +21,8 @@ from mspr2_back_spark.operators.jpeg import (
     DC_LUMA_BITS,
     DC_LUMA_VALS,
     _canonical_codes,
+    _edge_pad,
     _encode_baseline_scan,
-    _encode_scan_vectorized,
 )
 
 
@@ -167,15 +166,20 @@ def test_vectorized_scan_coder_matches_scalar_reference(seed, ri, shape):
     ref = _ref_scan(
         flat, samp, comp_bw, mcu_x, mcu_y, dc_codes, ac_codes, ri
     )
-    # the production dispatcher (scalar below _VECTOR_SCAN_MIN_BLOCKS,
-    # vectorized above) …
     got = _encode_baseline_scan(
         flat, samp, comp_bw, mcu_x, mcu_y, dc_tables, ac_tables, ri
     )
     assert got == ref
-    # … AND the vectorized coder forced at EVERY size, so the small
-    # shapes (the dispatcher's scalar side) still pin its bit-identity
-    got_vec = _encode_scan_vectorized(
-        flat, samp, comp_bw, mcu_x, mcu_y, dc_tables, ac_tables, ri
-    )
-    assert got_vec == ref
+
+
+def test_edge_pad_replicates_and_refuses_to_crop():
+    plane = np.arange(12, dtype=np.float64).reshape(3, 4)
+    assert _edge_pad(plane, 3, 4) is plane
+    for th, tw in ((8, 8), (3, 9), (5, 4)):
+        assert np.array_equal(
+            _edge_pad(plane, th, tw),
+            np.pad(plane, ((0, th - 3), (0, tw - 4)), mode="edge"),
+        )
+    for th, tw in ((2, 4), (3, 3), (2, 8)):
+        with pytest.raises(ValueError, match="smaller than"):
+            _edge_pad(plane, th, tw)

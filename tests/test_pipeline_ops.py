@@ -246,20 +246,33 @@ def test_near_dup_clusters_chain_converges(spark):
     assert got == {i: 0 for i in range(12)}
 
 
-def test_star_contraction_matches_label_propagation(spark):
-    """r9 (VERDICT r8 task 4): the alternating large-star/small-star
-    CC must produce IDENTICAL (node, cluster) assignments to label
-    propagation across every graph shape the A/B exercised — chains
-    (diameter-bound for LP), cliques (the ≥27×-replication
-    densest-case star contraction targets), random graphs, and
-    descending-id chains (exercises the canonical high→low
-    orientation)."""
+def _union_find_clusters(edges):
+    """Pure-Python connected components: node -> min id in its
+    component (the ``near_dup_clusters`` output contract)."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def test_near_dup_clusters_matches_union_find(spark):
+    """``near_dup_clusters`` produces the same (node, cluster)
+    assignment as a union-find over the same edges, across chains
+    (diameter-bound rounds), descending-id chains, cliques, random
+    graphs, and a star joined to a chain."""
     import random
 
-    from mspr2_back_spark.operators.dedup import (
-        near_dup_clusters,
-        star_contraction_clusters,
-    )
+    from mspr2_back_spark.operators.dedup import near_dup_clusters
 
     rng = random.Random(42)
     rand = [
@@ -286,11 +299,7 @@ def test_star_contraction_matches_label_propagation(spark):
             r.node: r.cluster
             for r in near_dup_clusters(pairs, max_iter=60).collect()
         }
-        st = {
-            r.node: r.cluster
-            for r in star_contraction_clusters(pairs).collect()
-        }
-        assert st == lp, name
+        assert lp == _union_find_clusters(edges), name
 
 
 def test_pii_detect_and_redact_literals(spark):
@@ -3749,36 +3758,25 @@ def test_g711_encode_wav_roundtrip():
         encode_wav(pcm, 8000, codec="gsm")
 
 
-def test_near_dup_clusters_deep_chain_hedge(spark):
-    """r10 (VERDICT r9 hygiene note): on a chain DEEPER than label
-    propagation's default 20-round cap, ``near_dup_clusters`` must
-    fail loudly at the cap (never return an under-merged clustering),
-    and the documented escape hatches must both work: raising
-    ``max_iter`` to the diameter, or switching to the O(log n)-round
-    ``star_contraction_clusters`` hedge at its DEFAULT cap."""
+def test_near_dup_clusters_deep_chain_cap(spark):
+    """On a chain DEEPER than the default 20-round cap,
+    ``near_dup_clusters`` fails loudly at the cap (never returns an
+    under-merged clustering), and raising ``max_iter`` to the
+    diameter converges."""
     import pytest
 
-    from mspr2_back_spark.operators.dedup import (
-        near_dup_clusters,
-        star_contraction_clusters,
-    )
+    from mspr2_back_spark.operators.dedup import near_dup_clusters
 
     # a single 26-hop chain: diameter 25 > the default 20-round cap
     edges = [(i, i + 1) for i in range(25)]
     pairs = spark.createDataFrame(edges, "doc_id_1 long, doc_id_2 long")
     with pytest.raises(RuntimeError, match="no fixpoint"):
         near_dup_clusters(pairs)
-    expected = {i: 0 for i in range(26)}
     lifted = {
         r.node: r.cluster
         for r in near_dup_clusters(pairs, max_iter=30).collect()
     }
-    assert lifted == expected
-    hedged = {
-        r.node: r.cluster
-        for r in star_contraction_clusters(pairs).collect()
-    }
-    assert hedged == expected
+    assert lifted == {i: 0 for i in range(26)}
 
 
 def test_minhash_verify_joins_reuse_cached_doc_partitioning(spark, sf_dir):

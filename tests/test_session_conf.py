@@ -33,7 +33,9 @@ def test_advisory_accepts_jvm_size_literals(monkeypatch, val):
     assert _advisory_partition_bytes() == val.strip()
 
 
-@pytest.mark.parametrize("val", ["1 m", "1mib", "m", "-1m", "1.5m", ""])
+@pytest.mark.parametrize(
+    "val", ["1 m", "1mib", "m", "-1m", "1.5m", "", "64bb"]
+)
 def test_advisory_rejects_malformed_sizes(monkeypatch, val):
     monkeypatch.setenv("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", val)
     with pytest.raises(ValueError, match="SPARK_GRAFT_ADVISORY_PARTITION_BYTES"):

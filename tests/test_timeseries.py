@@ -698,3 +698,53 @@ def test_batch_funnel_oracle_parity_under_ts_collisions(spark, tmp_path):
     ocols = [d[0] for d in con.description]
     assert dict(zip(ocols, orow)) == {c: batch[c] for c in ocols}
     con.close()
+
+
+def test_funnel_latency_empty_funnel_matches_oracle(spark, tmp_path):
+    """No user reaches the last funnel stage: funnel_latency still
+    returns exactly one row — n_converted 0 and NULL latency stats —
+    equal to its DuckDB oracle over the same parquet."""
+    import datetime
+    import os
+
+    import duckdb
+
+    from mspr2_back_spark.plans.timeseries import funnel_latency
+    from mspr2_back_spark.plans.timeseries_oracle import TIMESERIES_ORACLE_SQL
+    from mspr2_back_spark.plans.workloads import FUNNEL_STAGES
+
+    T0 = datetime.datetime(2024, 5, 1, 8, 0, 0)
+    H = datetime.timedelta(hours=1)
+    rows = [
+        (i * 10 + k, T0 + k * H, i, stage, 0.0, None)
+        for i in range(3)
+        # every stage but the last, so nobody converts
+        for k, stage in enumerate(FUNNEL_STAGES[:-1])
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "event_id long, ts timestamp, user_id long,"
+        " event_type string, value double, props string",
+    )
+    sf = str(tmp_path / "empty_funnel")
+    os.makedirs(sf, exist_ok=True)
+    df.coalesce(1).write.mode("overwrite").parquet(
+        os.path.join(sf, "events.parquet")
+    )
+
+    got = funnel_latency(spark, sf).collect()
+    assert len(got) == 1
+    assert got[0].asDict() == {
+        "n_converted": 0, "min_sec": None, "p25_sec": None,
+        "p50_sec": None, "p75_sec": None, "max_sec": None,
+    }
+
+    con = duckdb.connect()
+    con.sql(
+        "CREATE VIEW events AS SELECT * FROM "
+        f"'{os.path.join(sf, 'events.parquet')}/*.parquet'"
+    )
+    orows = con.execute(TIMESERIES_ORACLE_SQL["funnel_latency"]).fetchall()
+    ocols = [d[0] for d in con.description]
+    con.close()
+    assert [dict(zip(ocols, r)) for r in orows] == [r.asDict() for r in got]
