@@ -81,9 +81,10 @@ the COMPACT contract record (~3.5 KB — floors, totals, spread
 scalars, probe, load, "cpus", "sf") so the driver's tail capture can
 always parse it; the per-pass matrix, max-side per-query maps and
 frame-leak detail live in a side file written before the line is
-printed ("full_artifact": /tmp/bench_full_c{cpus}.json — cpus-keyed
-so the driver's low-core sweep doesn't clobber the main record).
-The side file is a strict superset of the line.
+printed ("full_artifact": bench_full_c{cpus}.json in a fresh
+``tempfile.mkdtemp(prefix="bench-")`` directory owned by this run, so
+no other run or user can pre-own the path or leave a stale file
+there). The side file is a strict superset of the line.
 """
 
 from __future__ import annotations
@@ -91,6 +92,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import tempfile
 import time
 
 from mspr2_back_spark.plans import QUERIES
@@ -547,7 +549,6 @@ def main() -> None:
         # the stat that survives co-tenant noise (r14 VERDICT task 2)
         "queries_min_warm": best_warm,
         "total_min_warm": round(sum(best_warm.values()), 4),
-        "full_artifact": f"/tmp/bench_full_c{cpus}.json",
     }
     full = dict(compact)
     full.update(
@@ -566,7 +567,11 @@ def main() -> None:
     # contract line down with it — record the failure in the line
     # instead.
     try:
-        with open(compact["full_artifact"], "w") as fh:
+        path = os.path.join(
+            tempfile.mkdtemp(prefix="bench-"), f"bench_full_c{cpus}.json"
+        )
+        compact["full_artifact"] = full["full_artifact"] = path
+        with open(path, "w") as fh:
             json.dump(full, fh)
     except OSError as exc:
         compact["full_artifact"] = f"unwritable: {exc}"[:120]

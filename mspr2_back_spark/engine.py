@@ -62,8 +62,18 @@ class AnalyticsEngine:
 
     def covid_warehouse(self, data_dir: str) -> dict[str, DataFrame]:
         """Build the reference-parity pandemic warehouse from its CSVs
-        and register the serving views (see etl/run.py for the batch
-        job form)."""
+        and register the serving views over it (see etl/run.py for the
+        batch job form).
+
+        The warehouse is an eager snapshot taken at call time: every
+        table is ``localCheckpoint``-ed before its view is registered,
+        so a request reads the checkpoint blocks and never re-scans
+        the CSVs. Calling this again re-reads the bronze and refreshes
+        the snapshot. No CacheManager entry is created, so any later
+        read of the same CSVs (the nightly job, a fresh ``build_all``)
+        sees the files as they are then. The blocks live on the
+        executors: a lost executor loses them, and the remedy is to
+        call this again."""
         from mspr2_back_spark.etl import covid
         from mspr2_back_spark.etl.run import read_bronze
 
@@ -75,5 +85,6 @@ class AnalyticsEngine:
             bronze["metadata"],
             worldometer=bronze.get("worldometer"),
         )
-        covid.register_views(tables)
-        return tables
+        snapshot = {name: df.localCheckpoint() for name, df in tables.items()}
+        covid.register_views(snapshot)
+        return snapshot

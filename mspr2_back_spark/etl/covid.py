@@ -88,8 +88,13 @@ def build_countries(covid: DataFrame) -> DataFrame:
 
 
 def build_diseases(spark: SparkSession) -> DataFrame:
-    """Literal disease dim (ref app/etl.py:98)."""
-    return spark.createDataFrame([(1, "COVID-19")], "id INT, name STRING")
+    """Literal disease dim (ref app/etl.py:98). Built in the JVM from
+    a one-row range, so it plans with a known 16-byte size (a
+    broadcast side) instead of a Python-worker RDD scan of unknown
+    size."""
+    return spark.range(1, numPartitions=1).select(
+        F.lit(1).alias("id"), F.lit("COVID-19").alias("name")
+    )
 
 
 def build_vaccines(spark: SparkSession, metadata: DataFrame) -> DataFrame:
@@ -111,8 +116,10 @@ def build_vaccines(spark: SparkSession, metadata: DataFrame) -> DataFrame:
         "name",
         F.lit(1).alias("treated_disease"),
     )
-    default = spark.createDataFrame(
-        [(0, "unknown", 1)], "id INT, name STRING, treated_disease INT"
+    default = spark.range(1, numPartitions=1).select(
+        F.lit(0).alias("id"),
+        F.lit("unknown").alias("name"),
+        F.lit(1).alias("treated_disease"),
     )
     return ids.unionByName(default)
 
@@ -399,6 +406,9 @@ def save_tables(tables: dict[str, DataFrame], warehouse_dir: str) -> None:
 def register_views(tables: dict[str, DataFrame]) -> None:
     """Expose the warehouse to spark.sql — the serving layer queries
     these names exactly as the reference's SQL queries its Postgres
-    tables."""
+    tables. A view reads the frame it is given: over ``build_all``'s
+    lazy frames every query re-runs the CSV → star-schema build;
+    ``AnalyticsEngine.covid_warehouse`` registers a checkpointed
+    snapshot instead, so serving queries read stored tables."""
     for name, df in tables.items():
         df.createOrReplaceTempView(name)

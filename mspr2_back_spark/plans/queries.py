@@ -324,7 +324,9 @@ def brand_surrogate_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     brands = p.select(F.col("p_brand").alias("brand")).distinct()
     w = W.orderBy("brand")
     ids = brands.select(F.row_number().over(w).alias("brand_id"), "brand")
-    default = spark.createDataFrame([(0, "unknown")], "brand_id INT, brand STRING")
+    default = spark.range(1, numPartitions=1).select(
+        F.lit(0).alias("brand_id"), F.lit("unknown").alias("brand")
+    )
     return ids.unionByName(default)
 
 

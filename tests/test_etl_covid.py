@@ -20,23 +20,22 @@ from mspr2_back_spark.functions.marshal import records
 D = datetime.date
 
 
+COVID_ROWS = [
+    # (Date_reported, Country_code, Country, WHO_region, New_cases,
+    #  Cumulative_cases, New_deaths, Cumulative_deaths)
+    ("2020-12-28", "FR", "France", "EURO", 10, 10, 1, 1),
+    ("2021-01-03", "FR", "France", "EURO", 5, 15, None, 1),  # same ISO week as Dec-28
+    ("2021-01-04", "FR", "France", "EURO", 20, 35, 2, 3),
+    ("2021-01-11", "FR", "France", "EURO", None, 35, 1, 4),
+    ("2020-12-28", "XX", "Atlantis", None, 7, 7, 0, 0),  # null region
+    ("2021-01-04", "XX", "Atlantis", None, 3, 10, 1, 1),
+]
+
+
 @pytest.fixture(scope="module")
 def tables(spark):
-    covid_rows = [
-        # (Date_reported, Country_code, Country, WHO_region, New_cases,
-        #  Cumulative_cases, New_deaths, Cumulative_deaths)
-        ("2020-12-28", "FR", "France", "EURO", 10, 10, 1, 1),
-        ("2021-01-03", "FR", "France", "EURO", 5, 15, None, 1),  # same ISO week as Dec-28
-        ("2021-01-04", "FR", "France", "EURO", 20, 35, 2, 3),
-        ("2021-01-11", "FR", "France", "EURO", None, 35, 1, 4),
-        ("2020-12-28", "XX", "Atlantis", None, 7, 7, 0, 0),  # null region
-        ("2021-01-04", "XX", "Atlantis", None, 3, 10, 1, 1),
-    ]
     covid_raw = spark.createDataFrame(
-        [
-            (d, c, n, r, nc, cc, nd, cd)
-            for d, c, n, r, nc, cc, nd, cd in covid_rows
-        ],
+        COVID_ROWS,
         "Date_reported STRING, Country_code STRING, Country STRING, WHO_region STRING,"
         " New_cases INT, Cumulative_cases LONG, New_deaths INT, Cumulative_deaths LONG",
     )
@@ -295,3 +294,177 @@ def test_csv_ingestion_tolerates_malformed_rows(spark, tmp_path):
     )
     with _pytest.raises(Exception):
         strict.collect()
+
+
+# ---------------------------------------------------------------------------
+# Serving snapshot (AnalyticsEngine.covid_warehouse). These tests replace
+# the serving views, so they stay after every test that reads the
+# ``tables`` fixture's views.
+# ---------------------------------------------------------------------------
+
+SERVING_REQUESTS = (
+    ("total_cases", ()),
+    ("total_deaths", ()),
+    ("total_vaccines", ()),
+    ("weekly_statistics_total", (1, 3)),
+    ("weekly_statistics_pagination", (3,)),
+    ("weekly_statistics_by_country", ("FR",)),
+    ("covid_cases_evolution", ()),
+    ("vaccinations_evolution", ()),
+    ("top5_deaths", ()),
+    ("top5_cases", ()),
+    ("country_covid_rates", ()),
+    *(("worldmap", (m,)) for m in sorted(serving.WORLDMAP_METRICS)),
+    ("grafana_yearly_cases_delta", ()),
+    ("grafana_region_yearly_delta", ()),
+    ("grafana_latest_year_region_summary", ()),
+)
+
+
+def _write_bronze(root, case_factor: int = 1) -> str:
+    """Tiny bronze CSVs in the layout ``read_bronze`` reads, with the
+    FIXTURES.md edge cases: a null region, null case/death cells, the
+    ISO-week year boundary, null and blank VACCINES_USED, a padded
+    country name, scientific notation, a vaccination country with no
+    WHO match, and a zero population. ``case_factor`` scales New_cases
+    so a rewrite changes the totals."""
+    import csv
+
+    from mspr2_back_spark.etl import schemas
+
+    def write(path, schema, rows):
+        path.parent.mkdir(parents=True, exist_ok=True)
+        with open(path, "w", newline="") as fh:
+            w = csv.DictWriter(fh, [f.name for f in schema])
+            w.writeheader()
+            w.writerows(rows)
+
+    who = [f.name for f in schemas.WHO_COVID_SCHEMA]
+    write(
+        root / "data_covid" / "WHO-COVID-19-global-data.csv",
+        schemas.WHO_COVID_SCHEMA,
+        [
+            dict(zip(who, r[:4] + (None if r[4] is None else r[4] * case_factor,) + r[5:]))
+            for r in COVID_ROWS
+        ],
+    )
+    vax = ("COUNTRY", "DATE_UPDATED", "TOTAL_VACCINATIONS",
+           "PERSONS_VACCINATED_1PLUS_DOSE", "PERSONS_LAST_DOSE", "VACCINES_USED")
+    write(
+        root / "data_covid" / "vaccination-data.csv",
+        schemas.VACCINATION_SCHEMA,
+        [
+            dict(zip(vax, r))
+            for r in [
+                ("France", "2021-01-04", "1E2", 80.0, 70.0, "VaxA - One,VaxB - Two"),
+                ("France", "2021-01-11", "2.5E2", 180.0, 150.0, "VaxA - One,VaxB - Two"),
+                ("  atlantis ", "2021-01-04", 50.0, 40.0, 30.0, None),
+                ("Wakanda", "2021-01-04", 9.0, 9.0, 9.0, "  "),
+            ]
+        ],
+    )
+    write(
+        root / "data_covid" / "vaccination-metadata.csv",
+        schemas.VACCINATION_METADATA_SCHEMA,
+        [{"VACCINE_NAME": n} for n in ("VaxA - One", "VaxB - Two", "VaxC - Unused", None)],
+    )
+    write(
+        root / "worldometer_coronavirus_summary_data.csv",
+        schemas.WORLDOMETER_SCHEMA,
+        [{"country": "France", "population": 67_000_000}, {"country": "Atlantis", "population": 0}],
+    )
+    return str(root)
+
+
+def _serve_all(spark) -> dict:
+    out = {}
+    for name, params in SERVING_REQUESTS:
+        rows = records(getattr(serving, name)(spark, *params))
+        out[(name, params)] = sorted(rows, key=repr) if name == "worldmap" else rows
+    return out
+
+
+def test_serving_requests_cover_every_endpoint():
+    import inspect
+
+    endpoints = {
+        n for n, f in inspect.getmembers(serving, inspect.isfunction)
+        if f.__module__ == serving.__name__
+    }
+    assert {name for name, _ in SERVING_REQUESTS} == endpoints
+    assert len(endpoints) == 15
+
+
+def test_covid_warehouse_is_a_refreshable_snapshot(spark, tmp_path):
+    """The serving warehouse is an eager snapshot: it answers every
+    endpoint exactly as lazy views over the same CSVs do, keeps
+    answering once the CSVs are gone, leaves no CacheManager entry that
+    a later read of those CSVs could match, and a second call picks up
+    rewritten bronze."""
+    import shutil
+
+    from pyspark import StorageLevel
+
+    from mspr2_back_spark.engine import AnalyticsEngine
+    from mspr2_back_spark.etl.run import read_bronze
+
+    def build_lazy(data_dir):
+        b = read_bronze(spark, data_dir)
+        return covid.build_all(
+            spark, b["covid_raw"], b["vaccination"], b["metadata"],
+            worldometer=b.get("worldometer"),
+        )
+
+    data_dir = _write_bronze(tmp_path / "bronze")
+    lazy = build_lazy(data_dir)
+    covid.register_views(lazy)
+    expected = _serve_all(spark)
+    assert expected[("total_cases", ())] == [{"total_weekly_cases": 45}]
+
+    snapshot = AnalyticsEngine(spark).covid_warehouse(data_dir)
+    assert set(snapshot) == set(lazy)
+    # (a) same rows as the lazy views of the same files
+    assert _serve_all(spark) == expected
+    # (c) no cache entry: neither the snapshot nor a fresh build over
+    # the same CSVs is served from the CacheManager
+    for df in (*snapshot.values(), *build_lazy(data_dir).values()):
+        assert df.storageLevel == StorageLevel.NONE
+
+    # (b) no request re-scans the CSVs
+    shutil.rmtree(data_dir)
+    assert _serve_all(spark) == expected
+
+    # (d) rewritten bronze: a fresh build sees it, the snapshot does not
+    # until covid_warehouse is called again
+    _write_bronze(tmp_path / "bronze", case_factor=10)
+    [fresh] = (
+        build_lazy(data_dir)["weekly_statistics"]
+        .agg(F.sum("week_new_reported_cases").alias("s"))
+        .collect()
+    )
+    assert fresh.s == 450
+    assert records(serving.total_cases(spark)) == [{"total_weekly_cases": 45}]
+    AnalyticsEngine(spark).covid_warehouse(data_dir)
+    assert records(serving.total_cases(spark)) == [{"total_weekly_cases": 450}]
+
+
+def test_serving_snapshot_plans(spark, tmp_path):
+    """Plan pin for serving over the snapshot: no endpoint's plan scans
+    CSV, and the literal disease dim is a known-size broadcast side, so
+    the disease semi-join plans as a BroadcastHashJoin from the start
+    (an unknown-size dim made the initial plan a SortMergeJoin)."""
+    from mspr2_back_spark.engine import AnalyticsEngine
+
+    AnalyticsEngine(spark).covid_warehouse(_write_bronze(tmp_path / "bronze"))
+    for name, params in SERVING_REQUESTS:
+        df = getattr(serving, name)(spark, *params)
+        qe = df._jdf.queryExecution()
+        initial = qe.executedPlan().toString()  # AQE, not yet run
+        if name in ("covid_cases_evolution", "country_covid_rates"):
+            assert "SortMergeJoin" not in initial, name
+            assert any(
+                "BroadcastHashJoin" in line and "LeftSemi" in line
+                for line in initial.splitlines()
+            ), name
+        records(df)
+        assert "FileScan csv" not in qe.executedPlan().toString(), name
