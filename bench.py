@@ -175,71 +175,6 @@ HEADLINE = [
     "bigram_surprisal",
 ]
 
-# Queries benched in the PREVIOUS round's headline set — their
-# subtotal is emitted as "shared_prev_subtotal" so the
-# round-over-round like-for-like comparison lives in the artifact
-# itself instead of requiring the reader to re-sum (VERDICT r5,
-# "What's wrong" #2). Update alongside HEADLINE each round.
-PREV_ROUND_HEADLINE = [
-    "pricing_summary",
-    "weekly_rollup",
-    "revenue_by_nation",
-    "year_week_rollup_join",
-    "top5_customers",
-    "rolling_sum3",
-    "latest_order_per_customer",
-    "hourly_events",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "text_quality",
-    "text_token_stats",
-    "ann_topk",
-    "dedup_embedding_cosine",
-    "sessionize_events",
-    "rollup_revenue",
-    "percentile_prices",
-    "crud_upsert",
-    "waiting_orders_by_supplier",
-    "customer_order_histogram",
-    "bigram_pmi",
-    "bm25_topk",
-    "ann_batch_topk",
-    "attribution_last_touch",
-    "cms_heavy_hitters",
-    "tfidf_top_terms",
-    "funnel_latency",
-    "rfm_segments",
-    "event_association_rules",
-    "gapfill_user_daily",
-    "seasonal_decompose_daily",
-    "ml_forecast_ar_exact",
-    "rolling_active_users",
-    "event_weekday_contingency",
-    "skewed_join_topk",
-    "zorder_locality_audit",
-    "multimodal_jpeg_meta",
-    "hll_distinct_users",
-    # round 10 and round 11: no new registrations (registry closed at
-    # 149), so the headline set is unchanged — the whole previous set
-    # is the like-for-like comparison base.  Round 12 registers
-    # audio_feature_stats (retirement-funded); the headline set stays
-    # unchanged so shared_prev_subtotal remains like-for-like — the
-    # new query is driver-hashed in the sweep, and its per-doc numpy
-    # cost profile is already represented by multimodal_wav_stats.
-    # Round 13 registers multimodal_adpcm_stats (the precomputed
-    # spare slot) and applies the same rule: per-doc codec probe on
-    # ~100-sample waveforms, cost profile represented by
-    # multimodal_wav_stats / audio_feature_stats (SCALING.md codec
-    # cost table carries the per-second encode/decode constants);
-    # headline set unchanged, shared_prev_subtotal fully
-    # like-for-like for the third consecutive round
-    "multimodal_wav_stats",
-    "hll_distinct_users_sketch_only",
-    "dedup_keep_best",
-    "bigram_surprisal",
-]
-
 
 def _persistent_rdd_count(spark) -> int:
     """Entries in the context's persistent-RDD registry (cached
@@ -496,9 +431,6 @@ def main() -> None:
     total = round(sum(timings.values()), 4)
     total_max = round(sum(worst.values()), 4)
     total_max_warm = round(sum(worst_warm.values()), 4)
-    shared_prev = round(
-        sum(timings[n] for n in PREV_ROUND_HEADLINE if n in timings), 4
-    )
     # r19 (VERDICT r18 task 1): the printed line had outgrown the
     # driver's tail capture — the full 43×5 queries_passes matrix plus
     # leaked_frame_info made the one-line JSON driver-unparseable for
@@ -530,8 +462,6 @@ def main() -> None:
         "spread_pct_warm": round(
             100.0 * (total_max_warm - total) / total, 1
         ) if total else 0.0,
-        "shared_prev_subtotal": shared_prev,
-        "shared_prev_n": len(PREV_ROUND_HEADLINE),
         "persistent_rdds_baseline": baseline_rdds,
         "persistent_rdds_after_clear": residue,
         # residue classification (r16): any count above baseline with

@@ -62,29 +62,9 @@ class AnalyticsEngine:
 
     def covid_warehouse(self, data_dir: str) -> dict[str, DataFrame]:
         """Build the reference-parity pandemic warehouse from its CSVs
-        and register the serving views over it (see etl/run.py for the
-        batch job form).
+        and register the serving views over it. This is
+        ``etl.run.snapshot``, whose docstring states the snapshot
+        contract; etl/run.py also holds the batch job form."""
+        from mspr2_back_spark.etl import run
 
-        The warehouse is an eager snapshot taken at call time: every
-        table is ``localCheckpoint``-ed before its view is registered,
-        so a request reads the checkpoint blocks and never re-scans
-        the CSVs. Calling this again re-reads the bronze and refreshes
-        the snapshot. No CacheManager entry is created, so any later
-        read of the same CSVs (the nightly job, a fresh ``build_all``)
-        sees the files as they are then. The blocks live on the
-        executors: a lost executor loses them, and the remedy is to
-        call this again."""
-        from mspr2_back_spark.etl import covid
-        from mspr2_back_spark.etl.run import read_bronze
-
-        bronze = read_bronze(self.spark, data_dir)
-        tables = covid.build_all(
-            self.spark,
-            bronze["covid_raw"],
-            bronze["vaccination"],
-            bronze["metadata"],
-            worldometer=bronze.get("worldometer"),
-        )
-        snapshot = {name: df.localCheckpoint() for name, df in tables.items()}
-        covid.register_views(snapshot)
-        return snapshot
+        return run.snapshot(self.spark, data_dir)

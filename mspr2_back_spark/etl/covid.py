@@ -406,9 +406,8 @@ def save_tables(tables: dict[str, DataFrame], warehouse_dir: str) -> None:
 def register_views(tables: dict[str, DataFrame]) -> None:
     """Expose the warehouse to spark.sql — the serving layer queries
     these names exactly as the reference's SQL queries its Postgres
-    tables. A view reads the frame it is given: over ``build_all``'s
-    lazy frames every query re-runs the CSV → star-schema build;
-    ``AnalyticsEngine.covid_warehouse`` registers a checkpointed
-    snapshot instead, so serving queries read stored tables."""
+    tables. A view reads the frame it is given; ``etl.run.snapshot``
+    registers checkpointed frames, so serving queries read stored
+    tables."""
     for name, df in tables.items():
         df.createOrReplaceTempView(name)

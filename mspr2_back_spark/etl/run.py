@@ -8,12 +8,16 @@ ref app/etl.py:25-175):
         --data-dir /root/reference/app/data \
         --warehouse /tmp/pandemic_warehouse
 
-Reads the WHO/vaccination CSVs, builds every dimension, fact, and
-summary table, writes them as parquet (partitioned where a dominant
-predicate exists), registers serving views, and prints a row-count
-manifest. The reference's psycopg2 DELETE-then-JDBC-append dance
-(ref app/etl.py:25-42,161-172) becomes idempotent ``mode(overwrite)``
-parquet writes — rerunning the job converges instead of duplicating.
+The job is snapshot, then forecast, then save: ``snapshot`` reads the
+WHO/vaccination CSVs, builds every dimension, fact and summary table,
+checkpoints them and registers them as the serving views; the weekly
+forecast is computed from the snapshot; every table is written as
+parquet and a row-count manifest is printed. The views the job leaves
+are the new snapshot, so serving in the same session reads stored
+tables, never the CSVs. The reference's psycopg2 DELETE-then-JDBC-append
+dance (ref app/etl.py:25-42,161-172) becomes idempotent
+``mode(overwrite)`` parquet writes — rerunning the job converges
+instead of duplicating.
 """
 
 from __future__ import annotations
@@ -56,14 +60,19 @@ def read_bronze(spark: SparkSession, data_dir: str) -> dict[str, DataFrame]:
     return out
 
 
-def main(argv: list[str] | None = None) -> dict[str, int]:
-    parser = argparse.ArgumentParser(description=__doc__)
-    parser.add_argument("--data-dir", default="/root/reference/app/data")
-    parser.add_argument("--warehouse", default="/tmp/pandemic_warehouse")
-    args = parser.parse_args(argv)
+def snapshot(spark: SparkSession, data_dir: str) -> dict[str, DataFrame]:
+    """Build the warehouse from the bronze CSVs in ``data_dir`` and
+    register the serving views over it; returns name → DataFrame.
 
-    spark = get_spark(app_name="pandemic_etl")
-    bronze = read_bronze(spark, args.data_dir)
+    The warehouse is an eager snapshot taken at call time: every table
+    is ``localCheckpoint``-ed before its view is registered, so a
+    request reads the checkpoint blocks and never re-scans the CSVs.
+    Calling this again re-reads the bronze and refreshes the snapshot.
+    No CacheManager entry is created, so any later read of the same
+    CSVs (a fresh ``covid.build_all``) sees the files as they are then.
+    The blocks live on the executors: a lost executor loses them, and
+    the remedy is to call this again."""
+    bronze = read_bronze(spark, data_dir)
     tables = covid.build_all(
         spark,
         bronze["covid_raw"],
@@ -71,15 +80,26 @@ def main(argv: list[str] | None = None) -> dict[str, int]:
         bronze["metadata"],
         worldometer=bronze.get("worldometer"),
     )
+    tables = {name: df.localCheckpoint() for name, df in tables.items()}
+    covid.register_views(tables)
+    return tables
+
+
+def main(argv: list[str] | None = None) -> dict[str, int]:
+    parser = argparse.ArgumentParser(description=__doc__)
+    parser.add_argument("--data-dir", default="/root/reference/app/data")
+    parser.add_argument("--warehouse", default="/tmp/pandemic_warehouse")
+    args = parser.parse_args(argv)
+
+    tables = snapshot(get_spark(app_name="pandemic_etl"), args.data_dir)
     # Materialize the forecast table the reference serves but never
     # creates (SURVEY §2.10; ref app/routes/data.py:63-66).
     from mspr2_back_spark.ml.forecast import predict_weekly_statistics
 
-    tables["predicted_weekly_statistics"] = predict_weekly_statistics(
-        tables["weekly_statistics"]
-    )
+    predicted = predict_weekly_statistics(tables["weekly_statistics"]).localCheckpoint()
+    predicted.createOrReplaceTempView("predicted_weekly_statistics")
+    tables["predicted_weekly_statistics"] = predicted
     covid.save_tables(tables, args.warehouse)
-    covid.register_views(tables)
     manifest = {name: df.count() for name, df in tables.items()}
     print(json.dumps({"warehouse": args.warehouse, "tables": manifest}))
     return manifest

@@ -9,10 +9,9 @@ forecasting (SURVEY §2.9 M1-M8, re-expressed on MLlib + pandas UDFs).
   ``applyInPandas`` — one group per series, parallel across groups,
   sequential inside (the reference's LSTM loop shape, ref
   app/routes/predict_france_with_model.py:90-101). The default model
-  is a deterministic ridge-regularized linear AR fit in numpy; a
-  torch LSTM drops into the same seam when the library exists
-  (absent in this container — kept behind a try-import, same policy
-  as the multimodal codecs).
+  is a deterministic ridge-regularized linear AR fit in numpy; the
+  LSTM path (``NumpyLSTM``) runs in numpy too and loads a torch
+  ``state_dict`` given as numpy arrays.
 
 Scale: training data prep is all DataFrame ops; the forecast
 parallelism is the number of series, each group fitting in one
@@ -32,13 +31,6 @@ from pyspark.ml.feature import MinMaxScaler, OneHotEncoder, StringIndexer, Vecto
 from pyspark.ml.regression import RandomForestRegressor
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-try:  # pragma: no cover - torch is not shipped in this container
-    import torch  # noqa: F401
-
-    HAVE_TORCH = True
-except Exception:
-    HAVE_TORCH = False
 
 
 def build_rf_pipeline(

@@ -468,3 +468,63 @@ def test_serving_snapshot_plans(spark, tmp_path):
             ), name
         records(df)
         assert "FileScan csv" not in qe.executedPlan().toString(), name
+
+
+# Row counts of ``_write_bronze``'s tables, as the nightly job reports them.
+NIGHTLY_MANIFEST = {
+    "who_region": 2,
+    "country": 2,
+    "disease": 1,
+    "vaccine": 4,
+    "weekly_statistics": 5,
+    "daily_vaccine_statistics": 5,
+    "global_total_cumulative_cases": 1,
+    "global_statistics": 2,
+    "covid_global_yearly_summary": 2,
+    "covid_region_yearly_summary": 4,
+    "country_statistics": 2,
+    "population": 2,
+    "predicted_weekly_statistics": 8,
+}
+
+
+def test_nightly_job_leaves_the_serving_snapshot(spark, tmp_path):
+    """The nightly job (``etl.run.main``) run in the serving session:
+    it writes the manifest's tables as parquet and converges on rerun,
+    and the views it leaves are a checkpointed snapshot like
+    ``covid_warehouse``'s, so serving neither re-scans the CSVs nor
+    needs them any more."""
+    import shutil
+
+    from pyspark import StorageLevel
+
+    from mspr2_back_spark.engine import AnalyticsEngine
+    from mspr2_back_spark.etl import run
+
+    data_dir = _write_bronze(tmp_path / "bronze")
+    AnalyticsEngine(spark).covid_warehouse(data_dir)
+    expected = _serve_all(spark)
+
+    # (a) the manifest; (b) parquet read-back and an idempotent rerun
+    wh = str(tmp_path / "wh")
+    argv = ["--data-dir", data_dir, "--warehouse", wh]
+    manifest = run.main(argv)
+    assert manifest == NIGHTLY_MANIFEST
+    assert {n: spark.read.parquet(f"{wh}/{n}").count() for n in manifest} == manifest
+    assert run.main(argv) == manifest
+
+    # (c) no request scans CSV, and every endpoint answers as before
+    for name, params in SERVING_REQUESTS:
+        df = getattr(serving, name)(spark, *params)
+        records(df)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "FileScan csv" not in plan, name
+    assert _serve_all(spark) == expected
+
+    # (d) the views outlive the bronze
+    shutil.rmtree(data_dir)
+    assert _serve_all(spark) == expected
+
+    # (e) no view the job leaves is a CacheManager entry
+    for name in manifest:
+        assert spark.table(name).storageLevel == StorageLevel.NONE, name
