@@ -21,16 +21,21 @@ from mspr2_back_spark.plans import ORACLE_SQL, QUERIES
 _REPO_DIR = os.path.dirname(os.path.abspath(__file__))
 
 
-def _ensure_shipped(spark: SparkSession) -> None:
-    """Ship the package to Python workers via ``addPyFile``.
+def _prepare_session(spark: SparkSession) -> None:
+    """Adopt the harness's session: set the one reader conf the
+    queries need and ship the package to Python workers.
 
-    Queries that cross into Python (mapInPandas/applyInPandas) pickle
-    functions by module reference; workers only resolve those if
-    ``mspr2_back_spark`` is importable worker-side. The harness may
-    run from any cwd (and a real cluster's executors never share the
-    driver's cwd), so ship a zip of the package once per context —
-    exactly how a cluster deployment would submit it (--py-files).
+    The harness builds its own session, not ``session.get_spark``, so
+    the nanosecond-timestamp conf that ``get_spark`` sets is applied
+    here (a runtime conf: one py4j call). Queries that cross into
+    Python (mapInPandas/applyInPandas) pickle functions by module
+    reference; workers only resolve those if ``mspr2_back_spark`` is
+    importable worker-side. The harness may run from any cwd (and a
+    real cluster's executors never share the driver's cwd), so ship a
+    zip of the package once per context — exactly how a cluster
+    deployment would submit it (--py-files).
     """
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     sc = spark.sparkContext
     if getattr(sc, "_mspr2_pkg_shipped", False):
         return
@@ -46,7 +51,7 @@ def _wrap(
     fn: Callable[[SparkSession, str], DataFrame],
 ) -> Callable[[SparkSession, str], DataFrame]:
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _ensure_shipped(spark)
+        _prepare_session(spark)
         return fn(spark, sf_dir)
 
     return run
@@ -54,7 +59,7 @@ def _wrap(
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (TPC-H-Q1-shaped pricing summary) on sf0.001."""
-    _ensure_shipped(spark)
+    _prepare_session(spark)
     return QUERIES["pricing_summary"](spark, "/root/testdata/sf0.001")
 
 

@@ -1,90 +1,39 @@
 #!/usr/bin/env python
 """Benchmark the engine's headline queries.
 
-Runs at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS]; prints ONE JSON line:
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+Runs the HEADLINE queries over the tables in $SPARK_GRAFT_SF_DIR (the
+sf0.1 test data by default) on local[$SPARK_GRAFT_CPUS] and prints ONE
+compact JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
+"queries": {...}, "sf": ..., ...}, with the per-query floor
+("queries_min_warm") last.
 
-Each query executes as a count-materialization (full plan runs, no
-driver-side result marshalling in the timing). Warmup runs every
-headline query once at sf0.001 first: that compiles and caches the
-whole-stage-codegen classes and spins up the Python UDF workers, so
-the timed sf run measures steady-state execution (what a long-lived
-cluster sees), not one-time JVM/JIT startup.
-
-Noise resistance (round 5, repeats raised round 9): each query is
-timed REPEATS (5, was 3 — r8's within-run spread hit 29.7% under
-machine load, VERDICT r8 task 6) times and the reported per-query
-number is the MINIMUM — the best-observed run is the least
-contaminated by co-tenant load / GC / page-cache misses, which round
-3/4 showed can move sub-second timings ±30% between otherwise
-identical runs (driver recorded 11.05 s where same-code local runs
-measured 8.85 s). The spread is reported alongside ("queries_max",
-"spread_pct") so a noisy environment is visible in the record
-instead of silently inflating the headline total. Repetitions
-interleave full passes (q1..qn, q1..qn, ...) rather than
-back-to-back repeats so one query's page-cache warmth doesn't
-uniquely favor its own later reps.
-
-Cache lifecycle (round 9, VERDICT r8 task 5): the driver that owns
-the session also owns the session cache
-(plans/timeseries.py's funnel contract), so the bench now calls
-``spark.catalog.clearCache()`` after every timed query — queries
-that persist internally (funnel_latency) are timed INCLUDING their
-per-run persist cost, and a same-plan cache hit from a previous rep
-can no longer flatter any number (Spark's CacheManager matches by
-analyzed plan, so without the clear, rep N of a persisting query
-silently reused rep N-1's cache). The JSON records
-``persistent_rdds_after_clear`` plus the r16 residue
-classification: the leak tripwire asserts the two REAL leak
-classes directly (SQL-cache entries surviving clearCache; Python
-DataFrame objects surviving gc), while a registry count above
-baseline with both classes clean is scheduler-pinned
-localCheckpoint lifecycle residue — bounded, Python-unreachable,
-reaped by Spark's periodic GC — recorded, not failed (the r16
-bisect that separated these classes is in the
-``_persistent_rdd_count`` docstring). r17 adds two guards around
-that classification: surviving-frame repr/referrers go INTO the
-JSON (``leaked_frame_info``) before the assert so a false positive
-is diagnosable from the artifact alone, and residue growth above
-``MAX_CHECKPOINT_RESIDUE`` fails the run even with both direct
-classes clean — a JVM-side RDD-level leak (neither cached SQL plan
-nor Python frame) can no longer hide as classified residue.
-
-Load context (round 10, VERDICT r9 task 5; strengthened round 14,
-VERDICT r13 task 4): the timed sweep gates on a two-tier quiet
-window — up to 300 s waiting for 1-min loadavg < 2 (the SCALING.md
-record threshold; "quiet_achieved": true in the artifact), then up
-to a further 120 s for loadavg < 8 (the old hard gate), then runs
-anyway — a busy box must still produce a number.  The artifact
-records the tier outcome, total wait, the loadavg at gate exit, and
-the loadavg at every pass BOUNDARY ("loadavg_per_pass": N+1
-samples for N passes — start of each pass plus one after the last,
-r17 verdict task 6), so uniform cross-round drift can be
-attributed to measured co-tenant load from the artifact alone, and
-a quiet capture is distinguishable from a forced one without a
-side-channel reference (the r13 artifact needed one: every query
-drifted up together at loadavg 6–8, which passed the old gate).
-
-Max-side attribution (round 11, VERDICT r10 "What's wrong" #2): the
-r10 max-side spread (39.5%) mixed each query's page-cache-cold FIRST
-pass with co-tenant noise and the artifact couldn't tell them apart.
-The artifact now carries the full per-pass matrix ("queries_passes",
-pass-ordered — pass i of query q is queries_passes[q][i]) plus the
-warm-side aggregates computed over passes 2..N only ("queries_max_warm",
-"total_max_warm", "spread_pct_warm"): a cold first pass widens
-spread_pct but not spread_pct_warm, while genuine co-tenant noise
-widens both. Any other slice is recomputable from the matrix.
-
-Artifact split (round 19, VERDICT r18 task 1): the printed line is
-the COMPACT contract record (~3.5 KB — floors, totals, spread
-scalars, probe, load, "cpus", "sf") so the driver's tail capture can
-always parse it; the per-pass matrix, max-side per-query maps and
-frame-leak detail live in a side file written before the line is
-printed ("full_artifact": bench_full_c{cpus}.json in a fresh
-``tempfile.mkdtemp(prefix="bench-")`` directory owned by this run, so
-no other run or user can pre-own the path or leave a stale file
-there). The side file is a strict superset of the line.
+- Warm-up: every headline query runs once at sf0.001 first. That
+  compiles their whole-stage-codegen classes into the session's class
+  cache (sized to hold them: session.CODEGEN_CACHE_ENTRIES) and starts
+  the Python UDF workers, so the timed passes measure steady-state
+  execution, not one-time JVM/JIT/Janino work. A plan that AQE shapes
+  differently at the timed scale compiles its new classes once, in
+  the first timed pass.
+- Timing: REPEATS interleaved passes (q1..qn, q1..qn, ...), each query
+  forced with count(). "queries" is the minimum per query; the
+  "_warm" aggregates use passes 2..N, so a cold first pass widens
+  spread_pct but not spread_pct_warm.
+- Cache lifecycle: spark.catalog.clearCache() after every query, so a
+  persisting query pays its fill on every pass. After the sweep the
+  run fails if a SQL cache entry survives, a DataFrame survives gc, or
+  the persistent-RDD registry grew past MAX_CHECKPOINT_RESIDUE.
+- Load context: the sweep waits up to 300 s for 1-min loadavg < 2,
+  then up to 120 s for < 8, then runs anyway; the gate outcome,
+  loadavg per pass boundary and a pure-Python CPU probe before and
+  after are recorded.
+- Side file: "full_artifact" names bench_full_c{cpus}.json in a fresh
+  tempfile.mkdtemp(prefix="bench-") directory, a superset of the line:
+  the per-pass matrix ("queries_passes"), max-side aggregates, frame
+  leak detail, and the codegen classes compiled per query per timed
+  pass ("queries_codegen_compiles") with their per-pass totals
+  ("codegen_compiles_per_pass", also on the line). A warm pass should
+  compile next to nothing; a rising count means the class cache is
+  evicting the working set.
 """
 
 from __future__ import annotations
@@ -96,7 +45,11 @@ import tempfile
 import time
 
 from mspr2_back_spark.plans import QUERIES
-from mspr2_back_spark.session import DEFAULT_SHUFFLE_PARTITIONS, get_spark
+from mspr2_back_spark.session import (
+    DEFAULT_SHUFFLE_PARTITIONS,
+    codegen_compiles,
+    get_spark,
+)
 
 REPEATS = 5
 
@@ -340,6 +293,7 @@ def main() -> None:
     probe_start = cpu_probe_ms()
 
     samples: dict[str, list[float]] = {name: [] for name in HEADLINE}
+    compiles: dict[str, list[int]] = {name: [] for name in HEADLINE}
     # loadavg at every pass BOUNDARY (r17 verdict task 6): N passes
     # yield N+1 samples — start of each pass plus one after the
     # final pass — so co-tenant load arriving MID-sweep is
@@ -349,9 +303,11 @@ def main() -> None:
     for _ in range(REPEATS):
         loadavg_per_pass.append([round(x, 2) for x in os.getloadavg()])
         for name in HEADLINE:
+            c0 = codegen_compiles(spark)
             t0 = time.perf_counter()
             QUERIES[name](spark, sf_dir).count()
             samples[name].append(time.perf_counter() - t0)
+            compiles[name].append(codegen_compiles(spark) - c0)
             # the bench owns the session cache (the funnel contract,
             # plans/timeseries.py): drop whatever the query persisted
             # OUTSIDE the timed window, so no same-plan cache hit
@@ -475,6 +431,9 @@ def main() -> None:
         "loadavg_per_pass": loadavg_per_pass,
         "load_gate": load_gate,
         "cpu_probe_ms": [probe_start, cpu_probe_ms()],
+        "codegen_compiles_per_pass": [
+            sum(c[i] for c in compiles.values()) for i in range(REPEATS)
+        ],
         # floors LAST: the per-query floor (min over warm passes) is
         # the stat that survives co-tenant noise (r14 VERDICT task 2)
         "queries_min_warm": best_warm,
@@ -489,6 +448,7 @@ def main() -> None:
                 for name, ts in samples.items()
             },
             "queries_max_warm": worst_warm,
+            "queries_codegen_compiles": compiles,
             "leaked_frame_info": leaked_frame_info,
         }
     )

@@ -2,9 +2,10 @@
 
 The reference coerces query results row-by-row to JSON-safe values
 (ref app/routes/data.py:14-48): NaN→null, numpy scalars→native,
-Decimal→float, date/datetime→ISO-8601 strings. Here the conversion is
-one Arrow-batched pass over the collected result — the serving
-contract, not the engine, owns presentation types.
+Decimal→float, date/datetime→ISO-8601 strings. Here ``records`` does
+the same: ``df.collect()`` brings the result to the driver as Rows, and
+each value of each Row is converted in Python — the serving contract,
+not the engine, owns presentation types.
 """
 
 from __future__ import annotations

@@ -16,6 +16,18 @@ from pyspark.sql import SparkSession
 # the default shuffle partition count.
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# Entries in Spark's generated-class cache (static conf
+# spark.sql.codegen.cache.maxEntries; Spark's default is 100). The
+# engine runs one fixed set of plans again and again, so the cache must
+# hold all of them or every warm run recompiles its classes with Janino
+# on the driver. Working set, counted as Janino compiles in a cold
+# local[1] JVM (codegen_compiles below) with the package shipped to the
+# workers: 1,925 classes for one pass over the 151 named queries at
+# sf0.001 (Python-UDF queries included), plus 239 for the warehouse
+# snapshot and one pass over the 15 serving endpoints (130 + 109).
+# 4096 is about twice their sum.
+CODEGEN_CACHE_ENTRIES = 4096
+
 # JVM byte-size literal: digits plus an optional unit — 'b', or one of
 # k/m/g/t optionally followed by 'b' (e.g. "64m", "64mb", "1048576").
 _SIZE_RE = re.compile(r"^[0-9]+(?:b|[kmgt]b?)?$", re.IGNORECASE)
@@ -119,6 +131,10 @@ def get_spark(
         # identical. load_table additionally normalizes NTZ for
         # sessions built outside this factory (sources/readers.py).
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        # Read nanosecond parquet timestamps as longs instead of
+        # failing the scan; load_table truncates them to micros.
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
@@ -129,3 +145,15 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes compiled by Janino in this JVM so far.
+
+    Each compile is a miss in the class cache that
+    CODEGEN_CACHE_ENTRIES sizes, so over a warm pass of a fixed set of
+    plans the delta of this count should be 0.
+    """
+    jvm = spark.sparkContext._jvm
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

@@ -53,17 +53,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one test table. Plain parquet scan: predicate pushdown,
     column pruning, and partition coalescing all apply.
 
-    The events table carries a nanosecond parquet timestamp, which
-    Spark's reader rejects by default; we read it as a long
-    (``nanosAsLong``) and truncate to microseconds with exact integer
-    division — the same truncation DuckDB applies, so both engines see
-    identical timestamps. Any TIMESTAMP_NTZ column is normalized to
-    TIMESTAMP here (see ``normalize_ntz``).
+    An events table written with a nanosecond parquet timestamp reads
+    as a long under ``spark.sql.legacy.parquet.nanosAsLong`` (set by
+    ``session.get_spark``; Spark's reader rejects nanos without it)
+    and is truncated to microseconds with exact integer division — the
+    same truncation DuckDB applies, so both engines see identical
+    timestamps. Any TIMESTAMP_NTZ column is normalized to TIMESTAMP
+    here (see ``normalize_ntz``).
     """
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass  # static conf in this session; reader may already handle nanos
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

@@ -71,3 +71,26 @@ def test_parquet_schema_evolution_mergeschema(spark, tmp_path):
     assert set(merged.columns) == {"id", "v", "score"}
     rows = {r.id: (r.v, r.score) for r in merged.collect()}
     assert rows == {1: ("a", None), 2: ("b", 9.5)}
+
+
+def test_load_table_reads_nanosecond_event_timestamps(spark, sf_dir, tmp_path):
+    """An events file written with nanosecond timestamps reads through
+    the session's nanosAsLong conf and truncates to the same
+    microsecond values as the committed (microsecond) file."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    micros = pq.read_table(f"{sf_dir}/events.parquet")
+    i = micros.schema.get_field_index("ts")
+    ns = pc.add(
+        micros.column(i).cast(pa.timestamp("ns")), pa.scalar(999, pa.duration("ns"))
+    )
+    pq.write_table(micros.set_column(i, "ts", ns), str(tmp_path / "events.parquet"))
+    assert pq.read_schema(tmp_path / "events.parquet").field("ts").type.unit == "ns"
+
+    got = load_table(spark, str(tmp_path), "events")
+    want = load_table(spark, sf_dir, "events")
+    assert dict(got.dtypes)["ts"] == dict(want.dtypes)["ts"] == "timestamp"
+    cols = ["event_id", "ts"]
+    assert _rows(got, cols) == _rows(want, cols)
