@@ -33,7 +33,10 @@ compact JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
   pass ("queries_codegen_compiles") with their per-pass totals
   ("codegen_compiles_per_pass", also on the line). A warm pass should
   compile next to nothing; a rising count means the class cache is
-  evicting the working set.
+  evicting the working set. "queries_build_jobs" holds the Spark jobs
+  each query fired while building its plan, per timed pass (a job
+  group around the build, apart from its count()); once the tables'
+  schemas are known that is only the documented persist fills.
 """
 
 from __future__ import annotations
@@ -49,6 +52,8 @@ from mspr2_back_spark.session import (
     DEFAULT_SHUFFLE_PARTITIONS,
     codegen_compiles,
     get_spark,
+    group_jobs,
+    job_group,
 )
 
 REPEATS = 5
@@ -198,6 +203,14 @@ def _persistent_rdd_count(spark) -> int:
     return cur
 
 
+def _build(spark, name: str, sf_dir: str, group: str):
+    """Build one query's plan under job group ``group``, so the jobs
+    fired while building (schema inference, persist fills) are counted
+    apart from the jobs of its count()."""
+    with job_group(spark, group):
+        return QUERIES[name](spark, sf_dir)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -294,20 +307,23 @@ def main() -> None:
 
     samples: dict[str, list[float]] = {name: [] for name in HEADLINE}
     compiles: dict[str, list[int]] = {name: [] for name in HEADLINE}
+    build_jobs: dict[str, list[int]] = {name: [] for name in HEADLINE}
     # loadavg at every pass BOUNDARY (r17 verdict task 6): N passes
     # yield N+1 samples — start of each pass plus one after the
     # final pass — so co-tenant load arriving MID-sweep is
     # attributable to the passes it straddles (the r17 driver
     # artifact's +8% ratio drift appeared between per-pass starts).
     loadavg_per_pass: list[list[float]] = []
-    for _ in range(REPEATS):
+    for rep in range(REPEATS):
         loadavg_per_pass.append([round(x, 2) for x in os.getloadavg()])
         for name in HEADLINE:
+            group = f"bench-build-{rep}-{name}"
             c0 = codegen_compiles(spark)
             t0 = time.perf_counter()
-            QUERIES[name](spark, sf_dir).count()
+            _build(spark, name, sf_dir, group).count()
             samples[name].append(time.perf_counter() - t0)
             compiles[name].append(codegen_compiles(spark) - c0)
+            build_jobs[name].append(group_jobs(spark, group))
             # the bench owns the session cache (the funnel contract,
             # plans/timeseries.py): drop whatever the query persisted
             # OUTSIDE the timed window, so no same-plan cache hit
@@ -449,6 +465,7 @@ def main() -> None:
             },
             "queries_max_warm": worst_warm,
             "queries_codegen_compiles": compiles,
+            "queries_build_jobs": build_jobs,
             "leaked_frame_info": leaked_frame_info,
         }
     )

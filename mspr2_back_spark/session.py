@@ -7,8 +7,10 @@ aggs, pushdown), which is identical on a 1000-executor cluster.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import re
+from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -36,20 +38,16 @@ _SIZE_RE = re.compile(r"^[0-9]+(?:b|[kmgt]b?)?$", re.IGNORECASE)
 def _advisory_partition_bytes() -> str:
     """Resolve the AQE advisory partition size from the env seam.
 
-    Validated here (r18 ADVICE) so a malformed value fails with a
-    ValueError naming SPARK_GRAFT_ADVISORY_PARTITION_BYTES instead of
-    an opaque JVM NumberFormatException at session creation.
+    A malformed value fails with a ValueError naming
+    SPARK_GRAFT_ADVISORY_PARTITION_BYTES instead of an opaque JVM
+    NumberFormatException at session creation.
 
-    The UNSET default is the scale-safe 64m (Spark's own default):
-    advisoryPartitionSizeInBytes is not just the coalescing target —
-    it is ALSO the size AQE splits skewed join partitions to (and the
-    rebalance target), so a 1m default on a production cluster with
-    skewJoin.enabled would shred a multi-GB hot-key partition into
-    thousands of ~1 MB splits, each re-reading the other join side
-    (r18 VERDICT "What's wrong" #1). The LOCAL benchmark recipe is
-    the place that wants 1m (sub-100MB shuffles under
-    parallelismFirst=false; measured sweep in SCALING.md), so
-    bench.py exports 1m itself and the production default stays safe.
+    The unset default is Spark's own 64m. The same conf is also the
+    size AQE splits skewed join partitions to (and the rebalance
+    target), so a small default would shred a multi-GB hot-key
+    partition on a cluster into thousands of splits, each re-reading
+    the other join side. The local benchmark recipe (bench.py) exports
+    1m itself: its shuffles are under 100 MB (sweep in SCALING.md).
     """
     raw = os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "64m")
     if not _SIZE_RE.match(raw.strip()):
@@ -85,43 +83,24 @@ def get_spark(
         )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # r18 (guide §2.2): respect the advisory partition size when
-        # coalescing instead of stopping at defaultParallelism — the
-        # default (parallelismFirst=true) keeps every KB-sized
-        # post-shuffle stage at `cores` tasks, pure task-launch
-        # overhead locally and exactly the many-tiny-blocks shape
-        # §2.2 warns about at cluster scale. Data-adaptive by
-        # construction: partition count follows bytes, not the box.
+        # Coalesce post-shuffle partitions to the advisory size instead
+        # of stopping at defaultParallelism, so a KB-sized stage runs
+        # one task, not `cores` tasks: partition count follows bytes.
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-        # r18 second cut: the advisory target is the scale-dependent
-        # half of the pair above, so it is parameterised (env seam).
-        # Measured at 64x sf0.1 (SCALING.md r18-optimization
-        # addendum): with 64m, corpus-scale shuffles in the
-        # 64 MB..cores×64 MB band coalesce to bytes/64m ≪ cores and
-        # serialize the box (event_association_rules 4.4 → 19.2 s);
-        # the 1m/2m/4m sweep found 1m dominant at both LOCAL scales,
-        # so the local bench recipe (bench.py) exports 1m. r19: the
-        # UNSET default moved 1m → 64m (Spark's default) because the
-        # same conf sizes AQE's skew-join splits and rebalance — a
-        # production cluster that forgot the env var would shred
-        # multi-GB hot-key partitions into ~1 MB splits, duplicating
-        # the build-side read thousands of times (r18 VERDICT
-        # "What's wrong" #1). Guide §2.2/§9: clusters want 64m-256m;
-        # there the mid band moves to total_cores×advisory — far
-        # below any 100 TB shuffle.
+        # The advisory size is the scale-dependent half of the pair
+        # above, so it comes from the env seam (see
+        # _advisory_partition_bytes). With 64m, shuffles between 64 MB
+        # and cores x 64 MB coalesce to fewer partitions than cores and
+        # serialize a local box (SCALING.md, the 64x probe).
         .config(
             "spark.sql.adaptive.advisoryPartitionSizeInBytes",
             _advisory_partition_bytes(),
         )
-        # r18: let AQE (incl. partition coalescing) apply to the
-        # plans that FILL persisted relations, so a users-sized
-        # cached relation is stored in data-proportional partitions
-        # instead of a fixed spark.sql.shuffle.partitions fan-out
-        # that every downstream stage inherits. Caches that encode
-        # COMPUTE density rather than bytes (the shingle projection,
-        # the packed BLAS blocks — Python/interpreted work per row)
-        # pin their partition count with explicit-N repartitions,
-        # which AQE never rewrites (REPARTITION_BY_NUM).
+        # Let AQE coalesce the plans that fill persisted relations, so
+        # a cached relation is stored in data-proportional partitions.
+        # Caches whose partitioning encodes compute density (the
+        # shingle projection, the packed BLAS blocks) pin their count
+        # with explicit-N repartitions, which AQE never rewrites.
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
@@ -135,6 +114,20 @@ def get_spark(
         # failing the scan; load_table truncates them to micros.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # No Python call-site capture (a static conf; Spark's default
+        # is true). With it on, PySpark wraps every Column and
+        # DataFrame API call: an active-session lookup, a read of
+        # spark.sql.stackTracesInDataFrameContext, a Python stack walk,
+        # a failed `import IPython` and a set and clear of the JVM's
+        # PySparkCurrentOrigin. F.col("x") measured 13 py4j round trips
+        # and 1.3 ms on, 3 and 0.6 ms off (local[1], shared 4-core x86
+        # host); F.col("x") + F.lit(1) 31 on, 7 off. Building one
+        # perfbench analytics query makes hundreds to thousands of such
+        # round trips (rfm_segments: 2,438 -> 925). Trade-off: an error
+        # keeps its condition, message and SQLSTATE (DIVIDE_BY_ZERO
+        # still raises), but its "== DataFrame ==" context names a JVM
+        # frame instead of the Python file:line that built the column.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
@@ -157,3 +150,24 @@ def codegen_compiles(spark: SparkSession) -> int:
     jvm = spark.sparkContext._jvm
     metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
     return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
+@contextlib.contextmanager
+def job_group(spark: SparkSession, group: str) -> Iterator[None]:
+    """Run the block's Spark jobs under job group ``group`` (this
+    thread only), restoring the outer group afterwards."""
+    sc = spark.sparkContext
+    outer = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", outer)
+
+
+def group_jobs(spark: SparkSession, group: str) -> int:
+    """Spark jobs run so far under job group ``group``. Waits for the
+    listener bus to drain first, so call it outside timed regions."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -14,6 +14,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TESTDATA_TABLES = (
     "region",
@@ -49,9 +50,52 @@ def normalize_ntz(df: DataFrame) -> DataFrame:
     return df
 
 
+def _file_identity(path: str) -> tuple | None:
+    """(relative path, size, mtime_ns) of every file at ``path``: the
+    file itself, or each file under a directory table. None when the
+    path cannot be stat'ed locally (missing, or a remote URI)."""
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return (("", st.st_size, st.st_mtime_ns),)
+        found = []
+        for root, _, files in os.walk(path):
+            for f in files:
+                full = os.path.join(root, f)
+                st = os.stat(full)
+                found.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+        return tuple(sorted(found))
+    except OSError:
+        return None
+
+
+def _inferred_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark infers for ``path``, inferred once per session
+    per file version. The memo lives on the session object (one entry
+    per path), so a session with other reader confs infers its own;
+    a rewritten table no longer matches its identity and is inferred
+    again. (A rewrite that keeps every file's size and mtime, to the
+    filesystem's timestamp granularity, is not seen.)"""
+    memo = getattr(spark, "_mspr2_parquet_schemas", None)
+    if memo is None:
+        memo = spark._mspr2_parquet_schemas = {}
+    identity = _file_identity(path)
+    hit = memo.get(path)
+    if identity is not None and hit is not None and hit[0] == identity:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    if identity is not None:
+        memo[path] = (identity, schema)
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one test table. Plain parquet scan: predicate pushdown,
     column pruning, and partition coalescing all apply.
+
+    The scan reads with the schema Spark inferred for the same file
+    version in this session (``_inferred_schema``), so only the first
+    read of a file version fires Spark's schema-inference job.
 
     An events table written with a nanosecond parquet timestamp reads
     as a long under ``spark.sql.legacy.parquet.nanosAsLong`` (set by
@@ -61,7 +105,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     timestamps. Any TIMESTAMP_NTZ column is normalized to TIMESTAMP
     here (see ``normalize_ntz``).
     """
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(_inferred_schema(spark, path)).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return normalize_ntz(df)

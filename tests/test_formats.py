@@ -9,6 +9,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from mspr2_back_spark.session import group_jobs, job_group
 from mspr2_back_spark.sources.readers import (
     load_table,
     read_raw_text,
@@ -94,3 +95,51 @@ def test_load_table_reads_nanosecond_event_timestamps(spark, sf_dir, tmp_path):
     assert dict(got.dtypes)["ts"] == dict(want.dtypes)["ts"] == "timestamp"
     cols = ["event_id", "ts"]
     assert _rows(got, cols) == _rows(want, cols)
+
+
+def _load_jobs(spark, path, group):
+    """Load ``path``'s table under a job group; return the frame and
+    the Spark jobs the load fired."""
+    with job_group(spark, group):
+        df = load_table(spark, str(path), "t")
+    return df, group_jobs(spark, group)
+
+
+def test_load_table_infers_each_file_version_once_per_session(spark, sf_dir, tmp_path):
+    """The first load of a file version infers its schema (one Spark
+    job); a second load of the unchanged file fires none and returns
+    the same schema; a rewrite at the same path is inferred again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    nation = pq.read_table(f"{sf_dir}/nation.parquet")
+    pq.write_table(nation, str(tmp_path / "t.parquet"))
+
+    first, jobs = _load_jobs(spark, tmp_path, "memo-first")
+    assert jobs >= 1
+    second, jobs = _load_jobs(spark, tmp_path, "memo-second")
+    assert jobs == 0
+    assert second.schema == first.schema
+    assert second.count() == nation.num_rows
+
+    extra = pa.array(range(nation.num_rows), pa.int64())
+    pq.write_table(nation.append_column("n_extra", extra), str(tmp_path / "t.parquet"))
+    rewritten, jobs = _load_jobs(spark, tmp_path, "memo-rewritten")
+    assert jobs >= 1
+    assert rewritten.columns == first.columns + ["n_extra"]
+    assert sorted(r.n_extra for r in rewritten.collect()) == list(range(nation.num_rows))
+
+
+def test_load_table_schema_memo_is_per_session(spark, sf_dir, tmp_path):
+    """A new session does not see another session's inferred schemas:
+    it infers its own, under its own reader confs."""
+    import shutil
+
+    shutil.copy(f"{sf_dir}/region.parquet", tmp_path / "t.parquet")
+    _load_jobs(spark, tmp_path, "memo-session-a")
+    _, jobs = _load_jobs(spark, tmp_path, "memo-session-a-again")
+    assert jobs == 0
+    other = spark.newSession()
+    df, jobs = _load_jobs(other, tmp_path, "memo-session-b")
+    assert jobs >= 1
+    assert df.count() == 5
