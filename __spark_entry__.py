@@ -9,42 +9,20 @@ non-SQL-expressible ops, which the driver checks rows-only).
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from mspr2_back_spark.plans import ORACLE_SQL, QUERIES
-
-_REPO_DIR = os.path.dirname(os.path.abspath(__file__))
+from mspr2_back_spark.session import ship_package
 
 
 def _prepare_session(spark: SparkSession) -> None:
-    """Adopt the harness's session: set the one reader conf the
-    queries need and ship the package to Python workers.
-
-    The harness builds its own session, not ``session.get_spark``, so
-    the nanosecond-timestamp conf that ``get_spark`` sets is applied
-    here (a runtime conf: one py4j call). Queries that cross into
-    Python (mapInPandas/applyInPandas) pickle functions by module
-    reference; workers only resolve those if ``mspr2_back_spark`` is
-    importable worker-side. The harness may run from any cwd (and a
-    real cluster's executors never share the driver's cwd), so ship a
-    zip of the package once per context — exactly how a cluster
-    deployment would submit it (--py-files).
-    """
+    """Adopt the harness's own session: set the one reader conf the
+    queries need (``get_spark`` sets it too; a runtime conf, one py4j
+    call) and ship the package to the Python workers."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    sc = spark.sparkContext
-    if getattr(sc, "_mspr2_pkg_shipped", False):
-        return
-    base = os.path.join(tempfile.mkdtemp(prefix="mspr2_pkg_"), "mspr2_back_spark")
-    zip_path = shutil.make_archive(
-        base, "zip", root_dir=_REPO_DIR, base_dir="mspr2_back_spark"
-    )
-    sc.addPyFile(zip_path)
-    sc._mspr2_pkg_shipped = True
+    ship_package(spark)
 
 
 def _wrap(

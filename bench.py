@@ -215,14 +215,12 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
-    # The local bench recipe wants the 1m AQE advisory partition size
-    # (the r18 two-scale sweep's winner for sub-100MB local shuffles
-    # under parallelismFirst=false — SCALING.md). r19 moved the
-    # session factory's UNSET default to the scale-safe 64m (the same
-    # conf sizes skew-join splits; VERDICT r18 "What's wrong" #1), so
-    # the bench exports its local value itself. setdefault: an
-    # explicit env override still wins, and the value used is
-    # recorded in the JSON line.
+    # The local bench runs with a 1m AQE advisory partition size: its
+    # shuffles are under 100 MB, and under parallelismFirst=false the
+    # session factory's scale-safe 64m default would coalesce them
+    # below the core count (sweep in SCALING.md). setdefault: an
+    # explicit env value still wins, and the value used is recorded in
+    # the JSON line.
     os.environ.setdefault("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "1m")
     spark = get_spark(app_name="mspr2_back_spark_bench")
 
@@ -236,24 +234,16 @@ def main() -> None:
     spark.catalog.clearCache()
     baseline_rdds = _persistent_rdd_count(spark)
 
-    # Load gate (round 10, VERDICT r9 task 5; strengthened round 14,
-    # VERDICT r13 task 4): co-tenant load is the dominant cross-round
-    # drift source (r9: uniform +25–40% max-side deltas under loadavg
-    # ~6.4 with zero plan changes; r13: every query drifted +2–103%
-    # together at loadavg 6–8, which PASSED the old threshold-8 gate,
-    # and the builder's separate quiet-window reference had to carry
-    # the real signal).  Two tiers, both bounded — the bench must
-    # still produce a number on a busy box:
-    #   1. QUIET tier: wait up to 300 s for 1-min loadavg < 2.0 (the
-    #      SCALING.md record-measurement threshold) so the
-    #      driver-visible artifact is capture-comparable across
-    #      rounds without a side-channel quiet reference.
-    #   2. HARD tier: if the box never goes quiet, wait up to a
-    #      further 120 s for loadavg < 8.0 (the old gate), then run
-    #      regardless.
-    # The artifact RECORDS the tier outcome (quiet_achieved), the
-    # total wait, and the loadavg at gate exit, so a reader can tell
-    # a quiet capture from a forced one from the JSON alone.
+    # Load gate: co-tenant load moves every query's wall time together,
+    # so the sweep waits for a quiet box, within bounded budgets (the
+    # bench must still produce a number on a busy box):
+    #   1. quiet tier: wait up to 300 s for 1-min loadavg < 2.0 (the
+    #      SCALING.md record-measurement threshold);
+    #   2. hard tier: if the box never goes quiet, wait up to a
+    #      further 120 s for loadavg < 8.0, then run regardless.
+    # The artifact records the tier outcome (quiet_achieved), the
+    # total wait and the loadavg at gate exit, so a quiet capture and
+    # a forced one can be told apart from the JSON alone.
     load_gate = {
         "quiet_threshold": 2.0,
         "hard_threshold": 8.0,
@@ -281,18 +271,14 @@ def main() -> None:
             load_gate["waited_sec"] += 10
     load_gate["load_at_start"] = round(os.getloadavg()[0], 2)
 
-    # Box-speed denominator (round 15): a fixed single-thread
-    # pure-python loop timed at gate exit and again after the
-    # passes.  Cross-round floor comparisons have repeatedly had to
-    # guess whether drift is code or box (r12-r15: broad-based
-    # 10-30% moves on queries frozen since r4).  Measured behavior
-    # on this box: the probe swings ~3x (129-376 ms) with HOST-side
-    # contention that container metrics miss entirely (container
-    # loadavg < 2 and /proc/stat steal = 0 during 2x swings) — so
-    # it is NOT a constant, it is the effective-core-speed sample
-    # the floors actually run under.  Read BENCH floors against it:
-    # floors that move with cpu_probe_ms are the box; floors that
-    # move against a flat probe are the engine.
+    # Box-speed denominator: a fixed single-thread pure-Python loop,
+    # timed at gate exit and again after the passes. On a shared host
+    # it swings about 3x (129-376 ms) with host-side contention that
+    # container metrics miss (loadavg < 2 and /proc/stat steal = 0
+    # during 2x swings), so it samples the core speed the floors ran
+    # under. Read the floors beside it: floors that move with
+    # cpu_probe_ms are the box; floors that move against a flat probe
+    # are the engine.
     def cpu_probe_ms() -> float:
         best = float("inf")
         for _ in range(3):
@@ -308,11 +294,9 @@ def main() -> None:
     samples: dict[str, list[float]] = {name: [] for name in HEADLINE}
     compiles: dict[str, list[int]] = {name: [] for name in HEADLINE}
     build_jobs: dict[str, list[int]] = {name: [] for name in HEADLINE}
-    # loadavg at every pass BOUNDARY (r17 verdict task 6): N passes
-    # yield N+1 samples — start of each pass plus one after the
-    # final pass — so co-tenant load arriving MID-sweep is
-    # attributable to the passes it straddles (the r17 driver
-    # artifact's +8% ratio drift appeared between per-pass starts).
+    # loadavg at every pass boundary: N passes yield N+1 samples (the
+    # start of each pass plus one after the last), so load arriving
+    # mid-sweep is attributable to the passes it straddles.
     loadavg_per_pass: list[list[float]] = []
     for rep in range(REPEATS):
         loadavg_per_pass.append([round(x, 2) for x in os.getloadavg()])

@@ -454,27 +454,6 @@ def _idct_blocks(coefs: np.ndarray) -> np.ndarray:
     return np.einsum("ji,njk,kl->nil", DCT_C, coefs, DCT_C)
 
 
-def _to_blocks(plane: np.ndarray) -> tuple[np.ndarray, int, int]:
-    """Pad a (h, w) plane to 8-multiples by edge replication and cut
-    into (n_blocks, 8, 8) in raster order."""
-    h, w = plane.shape
-    ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
-    padded = _edge_pad(plane, ph, pw)
-    blocks = (
-        padded.reshape(ph // 8, 8, pw // 8, 8)
-        .transpose(0, 2, 1, 3)
-        .reshape(-1, 8, 8)
-    )
-    return blocks, ph // 8, pw // 8
-
-
-def _from_blocks(blocks: np.ndarray, by: int, bx: int, h: int, w: int) -> np.ndarray:
-    full = (
-        blocks.reshape(by, bx, 8, 8).transpose(0, 2, 1, 3).reshape(by * 8, bx * 8)
-    )
-    return full[:h, :w]
-
-
 def _rgb_to_ycbcr(px: np.ndarray) -> np.ndarray:
     r = px[:, :, 0].astype(np.float64)
     g = px[:, :, 1].astype(np.float64)

@@ -312,19 +312,18 @@ def bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "p.head", "p.bigram")
     )
-    # r19 (VERDICT r18 task 3): the bigram-count relation is
-    # MATERIALIZED once (persist; distinct-bigram-bounded, the
-    # vocab²-sized LM-training relation) and the head-count marginal
-    # DERIVES from it: Σ cb over the bigrams sharing a head ≡ the
-    # pair count per head, and tokens never contain a space (WORDS
-    # splits on ' '), so substring_index(bigram, ' ', 1) recovers the
-    # head exactly. r18 measured that ReuseExchange never fires on
-    # this surface — each consumer re-ran its own corpus explode
-    # (4 scans / 4 Generates); the persisted relation computes once,
-    # cutting the corpus passes to 3 (pair fill + probe + vocabulary)
-    # and removing one corpus-grain aggregation outright. Cache
-    # lifecycle: the session owner clears (the funnel contract,
-    # plans/timeseries.py); MEMORY_AND_DISK + LRU bounds the harm.
+    # The bigram-count relation is persisted once and the head-count
+    # marginal derives from it: the sum of cb over the bigrams sharing
+    # a head is the pair count per head, and tokens never contain a
+    # space (WORDS splits on ' '), so substring_index(bigram, ' ', 1)
+    # recovers the head exactly. Each consumer of an unpersisted
+    # relation re-runs its own corpus explode (ReuseExchange does not
+    # fire here), so the corpus is read 3 times: pair fill, probe,
+    # vocabulary. The relation is bounded by the number of distinct
+    # bigrams, not by the vocabulary, so at open vocabulary it grows
+    # faster than the vocabulary does. MEMORY_AND_DISK with LRU
+    # eviction turns an overflow into spill, not failure. The session
+    # owner clears the cache (the funnel contract, plans/timeseries.py).
     cb = (
         pairs.groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("cb"))

@@ -10,6 +10,8 @@ from __future__ import annotations
 import contextlib
 import os
 import re
+import shutil
+import tempfile
 from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
@@ -137,7 +139,35 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    ship_package(spark)
     return spark
+
+
+def ship_package(spark: SparkSession) -> None:
+    """Send this package to the session's Python workers, once per
+    SparkContext.
+
+    mapInPandas/applyInPandas pickle their functions by module
+    reference, so a worker must import ``mspr2_back_spark`` itself. A
+    worker's cwd and sys.path are not the driver's (a cluster's
+    executors share neither), so the package goes out as a zip with
+    addPyFile, as a deployment submits it with --py-files. Sessions
+    that share a context (getOrCreate, newSession) share the zip.
+    """
+    sc = spark.sparkContext
+    if getattr(sc, "_mspr2_pkg_shipped", False):
+        return
+    # Not named mspr2_back_spark.zip: Spark refuses a second added file
+    # of one name from another path, and a caller may add its own zip
+    # under that name.
+    zip_path = shutil.make_archive(
+        os.path.join(tempfile.mkdtemp(prefix="mspr2_pkg_"), "mspr2_back_spark_pkg"),
+        "zip",
+        root_dir=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        base_dir="mspr2_back_spark",
+    )
+    sc.addPyFile(zip_path)
+    sc._mspr2_pkg_shipped = True
 
 
 def codegen_compiles(spark: SparkSession) -> int:
